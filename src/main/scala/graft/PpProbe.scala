@@ -3,11 +3,13 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.analytics.CheckpointRegistry.ckpt
+
 /** Phase timer for the prefix-filtered similarity join:
   * `runMain graft.PpProbe <sfDir>` times token-set build, prefix
   * construction, candidate generation, and the in-row verify
-  * separately (each materialized via count) — the d_dedup_ppjoin
-  * optimization loop's instrument, in the CadenceProbe/FamilyProbe
+  * separately (each materialized by one checkpoint job) — the
+  * d_dedup_ppjoin optimization loop's instrument, in the FamilyProbe
   * mold. */
 object PpProbe {
   def main(args: Array[String]): Unit = {
@@ -31,8 +33,14 @@ object PpProbe {
     val docs = Tables.documents(spark, sfDir)
     for (rep <- 1 to 2) {
       println(s"-- rep $rep")
-      val sets = PpJoin.tokenSets(docs).localCheckpoint(true)
-      t("token_sets")(sets.count())
+      // each stage is timed as one materializing job
+      def stage(name: String)(df: => org.apache.spark.sql.DataFrame)
+          : org.apache.spark.sql.DataFrame = {
+        var out: org.apache.spark.sql.DataFrame = null
+        t(name)({ val c = ckpt(df); out = c.df; c.rows })
+        out
+      }
+      val sets = stage("token_sets")(PpJoin.tokenSets(docs))
       var full: org.apache.spark.sql.DataFrame = null
       t("full_build")({ full = PpJoin.similarPairs(spark, docs); 1L })
       t("full_count")(full.count())
@@ -43,23 +51,21 @@ object PpProbe {
       val p = expr(s"n - ((${PpJoin.TauNum} * n + ${PpJoin.TauDen - 1}) div ${PpJoin.TauDen}) + 1")
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("doc_id")).orderBy(col("df"), col("t"))
-      val prefix = posts.join(dfTab, "t")
+      val prefix = stage("prefix")(posts.join(dfTab, "t")
         .withColumn("rn", row_number().over(w))
         .filter(col("rn") <= p)
-        .select(col("doc_id"), col("n"), col("t")).localCheckpoint(true)
-      t("prefix")(prefix.count())
+        .select(col("doc_id"), col("n"), col("t")))
       val aExp = prefix
         .withColumn("nb", explode(sequence(
           expr(s"(${PpJoin.TauNum} * n + ${PpJoin.TauDen - 1}) div ${PpJoin.TauDen}"),
           expr(s"(n * ${PpJoin.TauDen}) div ${PpJoin.TauNum}"))))
         .select(col("doc_id").as("a_id"), col("t").as("ta"), col("nb"))
-      val cand = aExp
+      val cand = stage("candidates")(aExp
         .join(prefix.select(col("doc_id").as("b_id"), col("n").as("nb2"),
           col("t").as("tb")),
           col("ta") === col("tb") && col("nb") === col("nb2"))
         .filter(col("a_id") < col("b_id"))
-        .select(col("a_id"), col("b_id")).distinct().localCheckpoint(true)
-      t("candidates")(cand.count())
+        .select(col("a_id"), col("b_id")).distinct())
       val sa = sets.select(col("doc_id").as("a_id"), col("ts").as("tsa"),
         col("n").as("na"))
       val sb = sets.select(col("doc_id").as("b_id"), col("ts").as("tsb"),

@@ -32,24 +32,19 @@ object SccProbe {
         }
       })
     for (d <- dirs) {
-      // A/B the trim phase in one warm JVM: trim-on, trim-off, trim-on
-      // (first run of a dir carries codegen; compare the LATER pair)
-      for (trimOn <- Seq(true, false, true)) {
-        sys.props("graft.scc.trim") = trimOn.toString
-        val j0 = jobCount.get()
-        val t0 = System.nanoTime()
-        val n = graft.analytics.Scc.scc(spark,
-          graft.graph.CitationGraph.edges(spark, d)).count()
-        graft.analytics.CheckpointRegistry.releaseAll(spark)
-        println(f"SCCPROBE $d trimOn=$trimOn rows=$n " +
-          f"outer=${graft.analytics.Scc.lastOuterRounds} " +
-          f"fwd=${graft.analytics.Scc.lastMaxFwdRounds} " +
-          f"bwd=${graft.analytics.Scc.lastMaxBwdRounds} " +
-          f"trim=${graft.analytics.Scc.lastTrimRounds} " +
-          f"trimmed=${graft.analytics.Scc.lastTrimmed} " +
-          f"jobs=${jobCount.get() - j0} " +
-          f"${(System.nanoTime() - t0) / 1e9}%.2fs")
-      }
+      val j0 = jobCount.get()
+      val t0 = System.nanoTime()
+      val n = graft.analytics.Scc.scc(spark,
+        graft.graph.CitationGraph.edges(spark, d)).count()
+      graft.analytics.CheckpointRegistry.releaseAll(spark)
+      println(f"SCCPROBE $d rows=$n " +
+        f"outer=${graft.analytics.Scc.lastOuterRounds} " +
+        f"fwd=${graft.analytics.Scc.lastMaxFwdRounds} " +
+        f"bwd=${graft.analytics.Scc.lastMaxBwdRounds} " +
+        f"trim=${graft.analytics.Scc.lastTrimRounds} " +
+        f"trimmed=${graft.analytics.Scc.lastTrimmed} " +
+        f"jobs=${jobCount.get() - j0} " +
+        f"${(System.nanoTime() - t0) / 1e9}%.2fs")
       val t1 = System.nanoTime()
       val nc = graft.analytics.Condensation.condensation(spark,
         graft.graph.CitationGraph.edges(spark, d)).count()

@@ -22,8 +22,8 @@ import graft.registry.Q
   * Scale shape: the two corpus-sized joins (edge endpoints → SCC ids)
   * happen ONCE before the loop; the depth loop then runs entirely on
   * the CONDENSED graph (components, not vertices). Scc's pinned loop
-  * and this one run serially — LoopConf is not reentrant, and the
-  * assignment is checkpoint-materialized between them. */
+  * and this one run serially — Superstep.pinned is not reentrant, and
+  * the assignment is checkpoint-materialized between them. */
 object Condensation {
 
   /** Longest-path unroll depth; measured fixpoint (SccProbe prints it):
@@ -38,8 +38,8 @@ object Condensation {
     // g_scc's assignment, materialized so its pinned loop fully exits
     // before ours starts; this ad-hoc path (specs, arbitrary edge
     // frames) registry-tracks its own checkpoint for release
-    val a = Scc.scc(spark, edgesRaw).localCheckpoint(true)
-    CheckpointRegistry.trackFinal(spark, a)
+    val a = CheckpointRegistry.keep(spark,
+      CheckpointRegistry.ckpt(Scc.scc(spark, edgesRaw)).df)
     condensationWith(spark, a, edgesRaw)
   }
 
@@ -48,64 +48,46 @@ object Condensation {
     * g_scc and g_condensation in one session pay the SCC loop once. */
   def condensationWith(spark: SparkSession, assign: DataFrame,
       edgesRaw: DataFrame): DataFrame = {
-    import org.apache.spark.sql.GraftColumnBridge
-
-    def ckpt(df: DataFrame): DataFrame = df.localCheckpoint(true)
-    def free(df: DataFrame): Unit =
-      GraftColumnBridge.checkpointRdd(df).foreach(_.unpersist(false))
+    import CheckpointRegistry.{Flagged, ckpt, free}
     val e = edgesRaw.select(col("src"), col("dst"))
       .filter(col("src") =!= col("dst")).distinct()
     val ce = ckpt(e
       .join(assign.select(col("id").as("src"), col("scc_id").as("s1")), "src")
       .join(assign.select(col("id").as("dst"), col("scc_id").as("s2")), "dst")
       .filter(col("s1") =!= col("s2"))
-      .select(col("s1").as("src"), col("s2").as("dst")).distinct())
+      .select(col("s1").as("src"), col("s2").as("dst")).distinct()).df
     val sizes = assign.groupBy(col("scc_id")).agg(count(lit(1)).as("size"))
 
-    val out = LoopConf.pinned(spark, org.apache.spark.sql.GraftColumnBridge.memoCount(ce)) {
-      var depthFull = ckpt(assign.select(col("scc_id")).distinct()
-        .select(col("scc_id"), lit(0L).as("depth"), lit(false).as("chg")))
-      var depth = depthFull.select(col("scc_id"), col("depth"))
-      var changed = 1L
-      var rounds = 0
+    val out = Superstep.pinned(spark, org.apache.spark.sql.GraftColumnBridge.memoCount(ce)) {
+      val depth0 = ckpt(assign.select(col("scc_id")).distinct()
+        .select(col("scc_id"), lit(0L).as("depth")))
       // the condensation is a DAG by SCC correctness, so this always
       // converges — the hard bound turns a (would-be-impossible) cycle
-      // into a loud failure instead of an infinite loop
-      while (changed > 0 && rounds < 64) {
-        rounds += 1
+      // into a loud failure instead of an infinite loop. Relaxation, its
+      // changed flag and the convergence count are one job per round.
+      val done = Superstep.untilFixpoint(depth0, Flagged("chg"), maxRounds = 64) { full =>
+        val depth = full.select(col("scc_id"), col("depth"))
         val relax = depth.join(ce, col("scc_id") === col("src"))
           .groupBy(col("dst")).agg(max(col("depth") + 1L).as("cand"))
           .select(col("dst").as("scc_id"), col("cand"))
-        // relaxation, its changed flag, AND the convergence count in one
-        // fused job (ckptCounted: materialization counts as it caches)
-        val (nextC, _, nChg) = GraftColumnBridge.ckptCounted(
-          depth.join(relax.hint("shuffle_hash"), Seq("scc_id"), "left")
-            .select(col("scc_id"),
-              greatest(col("depth"), coalesce(col("cand"), col("depth")))
-                .as("depth"),
-              (col("cand").isNotNull && col("cand") > col("depth")).as("chg")),
-          "chg")
-        changed = nChg
-        free(depthFull); depthFull = nextC
-        depth = depthFull.select(col("scc_id"), col("depth"))
+        depth.join(relax.hint("shuffle_hash"), Seq("scc_id"), "left")
+          .select(col("scc_id"),
+            greatest(col("depth"), coalesce(col("cand"), col("depth")))
+              .as("depth"),
+            (col("cand").isNotNull && col("cand") > col("depth")).as("chg"))
       }
-      require(changed == 0,
+      require(done.converged,
         "condensation depth relaxation did not converge in 64 rounds — " +
           "the contracted graph is not acyclic (SCC assignment bug)")
-      lastDepthRounds = rounds
-      // the result is a projection of depthFull — register the BACKING
-      // checkpoint (checkpointRdd only matches a bare LogicalRDD)
-      CheckpointRegistry.trackFinal(spark, depthFull)
-      depth
+      lastDepthRounds = done.rounds
+      done.df.select(col("scc_id"), col("depth"))
     }
     free(ce)
-    val res = out.join(sizes, "scc_id")
-      .select(col("scc_id"), col("depth"), col("size"))
-    // `assign` is NOT tracked here: the caller owns its lifetime (the
+    // `assign` is NOT kept here: the caller owns its lifetime (the
     // registry query passes Scc.assignmentFor's session-pinned cache,
     // which a post-query release would make unrecomputable)
-    CheckpointRegistry.trackFinal(spark, out)
-    res
+    out.join(sizes, "scc_id")
+      .select(col("scc_id"), col("depth"), col("size"))
   }
 
   // ---- registry entry ---------------------------------------------------

@@ -50,15 +50,7 @@ object Harmonic {
     * forward BFS, aggregates, releases the loop's checkpoints. */
   def harmonic(spark: SparkSession, edgesRaw: DataFrame,
       sourceMax: Long = SourceMax, rounds: Int = Rounds): DataFrame =
-    LoopConf.pinned(spark, org.apache.spark.sql.GraftColumnBridge.memoCount(edgesRaw)) {
-      import org.apache.spark.sql.GraftColumnBridge
-      val e = Stress.prep(edgesRaw).localCheckpoint(true)
-      val (reached, _, _) = Stress.forward(spark, e, sourceMax, rounds)
-      val out = aggregateLevels(reached)
-      GraftColumnBridge.checkpointRdd(e).foreach(_.unpersist(false))
-      CheckpointRegistry.trackFinal(spark, reached)
-      out
-    }
+    aggregateLevels(Stress.levels(spark, edgesRaw, sourceMax, rounds))
 
   /** Registry path: aggregate over the session-cached sampled BFS. */
   def harmonicFor(spark: SparkSession, dir: String): DataFrame =

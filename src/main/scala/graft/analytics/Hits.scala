@@ -26,7 +26,7 @@ import graft.registry.Q
   * (hash(src) and hash(dst)) and persisted; each iteration is two
   * aggregations that reuse those partitionings, state re-keys by id
   * through the vertex left join, and localCheckpoint pins the loop
-  * state per round (AQE off for the loop via LoopConf, so the exchange
+  * state per round (AQE off for the loop via Superstep.pinned, so the exchange
   * count is pinned).
   */
 object Hits {
@@ -39,13 +39,13 @@ object Hits {
 
   def hits(spark: SparkSession, edgesRaw: DataFrame, iters: Int = Iters)
       : DataFrame =
-    LoopConf.pinned(spark, org.apache.spark.sql.GraftColumnBridge.memoCount(edgesRaw)) {
+    Superstep.pinned(spark, org.apache.spark.sql.GraftColumnBridge.memoCount(edgesRaw)) {
       hitsPinned(spark, edgesRaw, iters)
     }
 
   private def hitsPinned(spark: SparkSession, edgesRaw: DataFrame,
       iters: Int): DataFrame = {
-    import org.apache.spark.sql.GraftColumnBridge
+    import CheckpointRegistry.{ckpt, free, keep}
 
     val e = edgesRaw.select(col("src"), col("dst"))
       .filter(col("src") =!= col("dst")).distinct()
@@ -69,31 +69,28 @@ object Hits {
       // the RAW sums are what gets checkpointed (two materializations
       // per round); the normalized views are constant-depth projections
       // over them, so nothing in the loop recomputes an aggregation
-      val aRaw = v.join(
+      val aRaw = ckpt(v.join(
           eBySrc.join(h.hint("shuffle_hash"), col("src") === col("id"))
             .groupBy(col("dst").as("aid")).agg(sum(col("s")).as("sr")),
           col("id") === col("aid"), "left")
-        .select(col("id"), coalesce(col("sr"), lit(0L)).as("s"))
-        .localCheckpoint(true)
-      val hRaw = v.join(
+        .select(col("id"), coalesce(col("sr"), lit(0L)).as("s"))).df
+      val hRaw = ckpt(v.join(
           eByDst.join(aRaw.hint("shuffle_hash"), col("dst") === col("id"))
             .groupBy(col("src").as("hid")).agg(sum(col("s")).as("sr")),
           col("id") === col("hid"), "left")
-        .select(col("id"), coalesce(col("sr"), lit(0L)).as("s"))
-        .localCheckpoint(true)
+        .select(col("id"), coalesce(col("sr"), lit(0L)).as("s"))).df
       // joint rescale: a 1-row aggregate frame, broadcast via crossJoin —
       // no driver-side action inside the loop, all-integer arithmetic
       val m = aRaw.agg(max(col("s")).as("ma"))
         .crossJoin(hRaw.agg(max(col("s")).as("mh")))
         .select(expr(s"coalesce(greatest(ma, mh), 0L) div $Scale + 1L").as("d"))
-      prevCkpts.foreach(p =>
-        GraftColumnBridge.checkpointRdd(p).foreach(_.unpersist(false)))
+      prevCkpts.foreach(free)
       prevCkpts = Seq(aRaw, hRaw)
       a = aRaw.crossJoin(m).select(col("id"), expr("s div d").as("s"))
       h = hRaw.crossJoin(m).select(col("id"), expr("s div d").as("s"))
     }
     Seq(eBySrc, eByDst, v).foreach(_.unpersist(false))
-    prevCkpts.foreach(CheckpointRegistry.trackFinal(spark, _))
+    prevCkpts.foreach(keep(spark, _))
     h.select(col("id"), col("s").as("hub"))
       .join(a.select(col("id").as("id2"), col("s").as("auth")),
         col("id") === col("id2"))

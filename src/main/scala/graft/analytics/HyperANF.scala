@@ -61,8 +61,8 @@ object HyperANF {
       lgK: Int = 12): Seq[ApproxHopRow] = {
     // Iterative co-partitioning contract (below) requires partitionings
     // that survive across supersteps — AQE off, shuffle partitions sized
-    // once from the edge count (LoopConf scaladoc has the full why).
-    LoopConf.pinned(spark, org.apache.spark.sql.GraftColumnBridge.memoCount(edges) * 2) {
+    // once from the edge count (Superstep.pinned has the full why).
+    Superstep.pinned(spark, org.apache.spark.sql.GraftColumnBridge.memoCount(edges) * 2) {
       approxHopPlotRowsPinned(spark, edges, maxD, lgK)
     }
   }
@@ -72,7 +72,6 @@ object HyperANF {
       edges: DataFrame,
       maxD: Int,
       lgK: Int): Seq[ApproxHopRow] = {
-    import org.apache.spark.sql.GraftColumnBridge
     import graft.graph.CitationGraph.bidirectional
 
     // Edges-by-dst layout, shuffled ONCE and reused every superstep
@@ -89,13 +88,14 @@ object HyperANF {
       .repartition(col("nb"))
       .persist(StorageLevel.MEMORY_AND_DISK)
 
-    // ball(v, 0) = {v}: a 1-element sketch per vertex. Fused
-    // checkpoint+count (ckptCounted): one job materializes and counts.
-    val (st0, n, _) = GraftColumnBridge.ckptCounted(
+    // ball(v, 0) = {v}: a 1-element sketch per vertex; one job
+    // materializes and counts
+    val st0 = CheckpointRegistry.ckpt(
       bidir.select(col("src").as("id")).distinct()
         .groupBy(col("id")).agg(hll_sketch_agg(col("id"), lit(lgK)).as("sk")))
-    var st = st0
-    var stCkpt = st0 // the LogicalRDD backing `st`, for explicit release
+    val n = st0.rows
+    var st = st0.df
+    var stCkpt = st0.df // the checkpoint backing `st`, for explicit release
     if (n == 0) { nbr.unpersist(false); return Seq.empty }
 
     val rows = scala.collection.mutable.ArrayBuffer[(Int, Long)]()
@@ -118,18 +118,18 @@ object HyperANF {
         case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => e
       }.size
       // ONE job per superstep: the estimate is computed INTO the
-      // checkpointed row and summed as the materialization caches it
-      // (ckptSummed) — the former eager checkpoint + a re-planned
-      // sum(estimate) aggregate were two jobs per superstep (guide
-      // §1.2). The est column stays out of the next round's joins via
-      // the (id, sk) projection below.
-      val (mergedFull, _, tot) = GraftColumnBridge.ckptSummed(
-        mergedDs.withColumn("est", hll_sketch_estimate(col("sk"))), "est")
-      // superseded frame is fully materialized into `merged`; free its
-      // blocks now instead of waiting on the ContextCleaner (ADVICE r2)
-      GraftColumnBridge.checkpointRdd(stCkpt).foreach(_.unpersist(false))
-      stCkpt = mergedFull
-      st = mergedFull.select(col("id"), col("sk"))
+      // checkpointed row and summed as the materialization caches it —
+      // a separate sum(estimate) aggregate would be a second job per
+      // superstep (guide §1.2). The est column stays out of the next
+      // round's joins via the (id, sk) projection below.
+      val merged = CheckpointRegistry.ckpt(
+        mergedDs.withColumn("est", hll_sketch_estimate(col("sk"))),
+        CheckpointRegistry.Sum("est"))
+      val tot = merged.stat
+      // the superseded frame is fully materialized into `merged`
+      CheckpointRegistry.free(stCkpt)
+      stCkpt = merged.df
+      st = stCkpt.select(col("id"), col("sk"))
       if (tot > last) {
         // a plateaued estimate followed by growth means the sketch was
         // noisy, not that the balls stopped growing — backfill the
@@ -146,7 +146,7 @@ object HyperANF {
         stale += 1
       }
     }
-    GraftColumnBridge.checkpointRdd(stCkpt).foreach(_.unpersist(false))
+    CheckpointRegistry.free(stCkpt)
     nbr.unpersist(false)
 
     val total = if (rows.isEmpty) 1L else math.max(rows.last._2, 1L)

@@ -62,38 +62,39 @@ object IncrementalComponents {
       Seq("id"), "left_anti")
     val lblAll = lblOf.union(newVerts.select(col("id"), col("id").as("comp")))
     // 2. contract batch edges to label pairs (both lookups broadcast:
-    // lblAll is O(|batch|) rows)
-    // fused checkpoint+count (ckptCounted): the contract count rides the
-    // materialization job instead of a second cached scan (guide §1.2)
-    val (labelEdges, nLabelEdges, _) =
-      org.apache.spark.sql.GraftColumnBridge.ckptCounted(batch
-        .join(broadcast(lblAll.withColumnRenamed("id", "src")
-          .withColumnRenamed("comp", "lsrc")), Seq("src"))
-        .join(broadcast(lblAll.withColumnRenamed("id", "dst")
-          .withColumnRenamed("comp", "ldst")), Seq("dst"))
-        .select(col("lsrc").as("src"), col("ldst").as("dst"))
-        .filter(col("src") =!= col("dst"))
-        .distinct())
-    lastLabelEdges = nLabelEdges
+    // lblAll is O(|batch|) rows); the contract count rides the
+    // materialization job
+    val labelEdges = CheckpointRegistry.ckpt(batch
+      .join(broadcast(lblAll.withColumnRenamed("id", "src")
+        .withColumnRenamed("comp", "lsrc")), Seq("src"))
+      .join(broadcast(lblAll.withColumnRenamed("id", "dst")
+        .withColumnRenamed("comp", "ldst")), Seq("dst"))
+      .select(col("lsrc").as("src"), col("ldst").as("dst"))
+      .filter(col("src") =!= col("dst"))
+      .distinct())
+    lastLabelEdges = labelEdges.rows
     // 3. min-label superstep on the contracted graph only
     val mergedLbl =
       if (lastLabelEdges == 0L)
         assignment.sparkSession.emptyDataFrame
           .select(lit(0L).as("id"), lit(0L).as("comp")).limit(0)
-      else ConnectedComponents.components(labelEdges)
-    val (mapping, nMapping, _) = org.apache.spark.sql.GraftColumnBridge
-      .ckptCounted(mergedLbl
-        .filter(col("id") =!= col("comp"))
-        .select(col("id").as("old_comp"), col("comp").as("new_comp")))
-    lastTouched = nMapping
+      else ConnectedComponents.components(labelEdges.df)
+    val mapping = CheckpointRegistry.ckpt(mergedLbl
+      .filter(col("id") =!= col("comp"))
+      .select(col("id").as("old_comp"), col("comp").as("new_comp")))
+    lastTouched = mapping.rows
+    // the mapping is materialized, so the contracted graph is spent; the
+    // mapping backs the lazy result
+    CheckpointRegistry.free(labelEdges.df)
+    CheckpointRegistry.keep(assignment.sparkSession, mapping.df)
     // 4. one narrow pass over the standing assignment applies the
     // broadcast mapping; batch-only vertices append with their merged
     // label
     val updated = assignment
-      .join(broadcast(mapping), col("comp") === col("old_comp"), "left")
+      .join(broadcast(mapping.df), col("comp") === col("old_comp"), "left")
       .select(col("id"), coalesce(col("new_comp"), col("comp")).as("comp"))
     val newAssigned = newVerts
-      .join(broadcast(mapping), col("id") === col("old_comp"), "left")
+      .join(broadcast(mapping.df), col("id") === col("old_comp"), "left")
       .select(col("id"), coalesce(col("new_comp"), col("id")).as("comp"))
     updated.union(newAssigned)
   }

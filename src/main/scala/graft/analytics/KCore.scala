@@ -2,7 +2,6 @@ package graft.analytics
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 import graft.registry.Q
 
@@ -13,12 +12,11 @@ import graft.registry.Q
   * Degrees are exact BIGINT counts, so the peel is bit-deterministic
   * across engines and layouts.
   *
-  * Loop shape (LoopConf-pinned like the other supersteps): edges live
+  * Loop shape (a Superstep fixpoint like the other peels): edges live
   * bidirectionalized and hash-partitioned by src; each round is one
   * co-partitioned degree aggregation plus two semi-joins against the
   * survivor set (the dst-side semi is the round's unavoidable exchange
-  * — peeling looks at both endpoints). State is localCheckpoint'ed on a
-  * cadence, superseded frames freed eagerly.
+  * — peeling looks at both endpoints).
   */
 object KCore {
 
@@ -29,21 +27,6 @@ object KCore {
     * to empty by round 3. */
   val K = 15
   val Rounds = 6
-
-  /** Peel `rounds` times; `rounds = Int.MaxValue` runs to the fixpoint
-    * (true k-core), early-stopping when an entire round removes no edge.
-    * Returns surviving (id, deg) with degrees in the FINAL edge set. */
-  /** Checkpoint/early-stop-check cadence: peel `ckptEvery` rounds per
-    * materialization. Correct at any value (the peel is deterministic;
-    * convergence detected at a batch boundary is still the fixpoint —
-    * edge count is monotone non-increasing, so equality across a batch
-    * implies no round in it changed anything). MEASURED cold per-JVM at
-    * sf0.1, 12-round fixpoint (CadenceProbe -kcore, 2 reps each):
-    * every=1 7.1/7.3s, every=2 8.3/9.5s, every=3 9.3/9.6s — the
-    * OPPOSITE of PageRank's curve: each peel round references the
-    * survivor set twice (both semi-joins), and the nested re-evaluation
-    * costs more than the per-round materialization saves. Stays 1. */
-  val CkptEvery = 1
 
   /** Rounds the last `kcore` call actually peeled before stopping (the
     * loop runs eagerly, so this is set by the time the DataFrame is
@@ -61,55 +44,25 @@ object KCore {
     * round (VERDICT r7 next #6). */
   @volatile private[graft] var lastInputEdges: Long = -1
 
+  /** Peel `rounds` times; `rounds = Int.MaxValue` runs to the fixpoint
+    * (true k-core), early-stopping when an entire round removes no edge.
+    * Returns surviving (id, deg) with degrees in the FINAL edge set. */
   def kcore(spark: SparkSession, edgesRaw: DataFrame, k: Int = K,
-      rounds: Int = Rounds, ckptEvery: Int = CkptEvery): DataFrame =
-    LoopConf.pinned(spark, org.apache.spark.sql.GraftColumnBridge.memoCount(edgesRaw)) {
-      kcorePinned(spark, edgesRaw, k, rounds, ckptEvery)
-    }
-
-  private def kcorePinned(spark: SparkSession, edgesRaw: DataFrame,
-      k: Int, rounds: Int, ckptEvery: Int): DataFrame = {
-    import org.apache.spark.sql.GraftColumnBridge
-    import graft.graph.CitationGraph.bidirectional
-
-    // fused checkpoint+count: one job materializes and counts (the eager
-    // ckpt + fastCount pair was two scheduler round-trips — guide §1.2)
-    val (e0, nE0, _) = GraftColumnBridge.ckptCounted(
-      bidirectional(edgesRaw).repartition(col("src")))
-    var e = e0
-    var prev = e
-    var nEdges = nE0
-    lastInputEdges = nEdges
-    var r = 0
-    var changed = true
-    while (r < rounds && changed && nEdges > 0) {
-      val batch = math.min(ckptEvery, rounds - r)
-      var cur = e
-      for (_ <- 1 to batch) {
-        val keep = cur.groupBy(col("src")).agg(count(lit(1)).as("d"))
+      rounds: Int = Rounds): DataFrame =
+    Superstep.pinned(spark, org.apache.spark.sql.GraftColumnBridge.memoCount(edgesRaw)) {
+      import graft.graph.CitationGraph.bidirectional
+      val e0 = CheckpointRegistry.ckpt(bidirectional(edgesRaw).repartition(col("src")))
+      lastInputEdges = e0.rows
+      val peeled = Superstep.untilFixpoint(e0, maxRounds = rounds) { e =>
+        val keep = e.groupBy(col("src")).agg(count(lit(1)).as("d"))
           .filter(col("d") >= k)
           .select(col("src").as("id"))
-        cur = cur
-          .join(keep, cur("src") === keep("id"), "left_semi")
-          .join(keep.select(col("id").as("id2")), cur("dst") === col("id2"), "left_semi")
+        e.join(keep, e("src") === keep("id"), "left_semi")
+          .join(keep.select(col("id").as("id2")), e("dst") === col("id2"), "left_semi")
       }
-      val (next, nNext, _) = GraftColumnBridge.ckptCounted(cur)
-      changed = nNext != nEdges
-      nEdges = nNext
-      GraftColumnBridge.checkpointRdd(prev).foreach(_.unpersist(false))
-      prev = next
-      e = next
-      r += batch
+      lastConvergenceRound = peeled.rounds
+      peeled.df.groupBy(col("src").as("id")).agg(count(lit(1)).as("deg"))
     }
-    lastConvergenceRound = r
-    // the final edge checkpoint backs the lazy result (ADVICE r5:
-    // repeated invocations otherwise accumulate pinned blocks for the
-    // session lifetime); the runner releases it via CheckpointRegistry
-    // after materializing
-    CheckpointRegistry.trackFinal(spark, e)
-    val out = e.groupBy(col("src").as("id")).agg(count(lit(1)).as("deg"))
-    out
-  }
 
   // ---- registry entry ---------------------------------------------------
 

@@ -17,65 +17,34 @@ import graft.registry.Q
   * (neighbor-label counts, map-side combinable) + one argmax
   * aggregation via max(struct(count, -label)) — no window over the
   * vertex set. Edges are shuffled onto src once before the loop
-  * (LoopConf-pinned).
+  * (Superstep.iterate).
   */
 object LabelPropagation {
 
   val Rounds = 3
 
-  /** Rounds per checkpoint. Each round references `lab` ONCE (hist ←
-    * lab⋈e, next ← hist) — the PageRank-shaped curve, where batching
-    * can win, unlike the double-reference k-core/SSSP loops. MEASURED
-    * cold per-JVM at sf0.1 (CadenceProbe -labelprop, 2 reps): every=1
-    * 5.4/5.8s, every=3 5.6/5.3s — a tie at 3 rounds; stays 1 (simplest,
-    * and per-round checkpoints keep lineage flat for deeper runs). */
-  val CkptEvery = 1
-
   def labelProp(spark: SparkSession, edgesRaw: DataFrame,
-      rounds: Int = Rounds, ckptEvery: Int = CkptEvery): DataFrame = {
+      rounds: Int = Rounds): DataFrame = {
     // rounds=0 would return a lazy frame over the edge checkpoint that
-    // the loop epilogue has already unpersisted — reject it up front
+    // the loop epilogue has already freed — reject it up front
     require(rounds >= 1, s"labelProp needs at least 1 round, got $rounds")
-    LoopConf.pinned(spark, org.apache.spark.sql.GraftColumnBridge.memoCount(edgesRaw)) {
-      labelPropPinned(spark, edgesRaw, rounds, ckptEvery)
+    Superstep.pinned(spark, org.apache.spark.sql.GraftColumnBridge.memoCount(edgesRaw)) {
+      import graft.graph.CitationGraph.bidirectional
+      val e = CheckpointRegistry.ckpt(bidirectional(edgesRaw)
+        .repartition(col("src"))).df
+      val lab0 = e.select(col("src").as("id")).distinct()
+        .select(col("id"), col("id").as("lab"))
+      val lab = Superstep.iterate(lab0, rounds) { (lab, _) =>
+        lab.join(e, col("id") === col("src"))
+          .groupBy(col("dst"), col("lab"))
+          .agg(count(lit(1)).as("c"))
+          .groupBy(col("dst"))
+          .agg(max(struct(col("c").as("c"), (-col("lab")).as("nl"))).as("m"))
+          .select(col("dst").as("id"), (-col("m.nl")).as("lab"))
+      }
+      CheckpointRegistry.free(e)
+      lab
     }
-  }
-
-  private def labelPropPinned(spark: SparkSession, edgesRaw: DataFrame,
-      rounds: Int, ckptEvery: Int): DataFrame = {
-    import org.apache.spark.sql.GraftColumnBridge
-    import graft.graph.CitationGraph.bidirectional
-
-    val e = bidirectional(edgesRaw)
-      .repartition(col("src"))
-      .localCheckpoint(true)
-    var lab = e.select(col("src").as("id")).distinct()
-      .select(col("id"), col("id").as("lab"))
-    var prevCkpt: Option[DataFrame] = None
-    var since = 0
-    for (r <- 1 to rounds) {
-      val hist = lab.join(e, col("id") === col("src"))
-        .groupBy(col("dst"), col("lab"))
-        .agg(count(lit(1)).as("c"))
-      val nextDs = hist
-        .groupBy(col("dst"))
-        .agg(max(struct(col("c").as("c"), (-col("lab")).as("nl"))).as("m"))
-        .select(col("dst").as("id"), (-col("m.nl")).as("lab"))
-      since += 1
-      if (since == ckptEvery || r == rounds) {
-        val next = nextDs.localCheckpoint(true)
-        prevCkpt.foreach(p =>
-          GraftColumnBridge.checkpointRdd(p).foreach(_.unpersist(false)))
-        prevCkpt = Some(next)
-        lab = next
-        since = 0
-      } else lab = nextDs
-    }
-    GraftColumnBridge.checkpointRdd(e).foreach(_.unpersist(false))
-    // final checkpoint backs the lazy result; the runner releases it via
-    // CheckpointRegistry once the result is materialized
-    prevCkpt.foreach(CheckpointRegistry.trackFinal(spark, _))
-    lab
   }
 
   // ---- registry entry ---------------------------------------------------
@@ -115,8 +84,8 @@ object LabelPropagation {
 
   def assignmentFor(spark: SparkSession, dir: String): DataFrame =
     assignCache.computeIfAbsent((graft.SessionKey(spark), dir), _ =>
-      labelProp(spark, graft.graph.CitationGraph.edges(spark, dir))
-        .localCheckpoint(true))
+      CheckpointRegistry.ckpt(
+        labelProp(spark, graft.graph.CitationGraph.edges(spark, dir))).df)
 
   /** Drop this session's cached assignments and free their blocks
     * (graft.SessionCaches hook — ADVICE r7 #2). */
@@ -126,8 +95,7 @@ object LabelPropagation {
     while (it.hasNext) {
       val e = it.next()
       if (e.getKey._1 == sid) {
-        org.apache.spark.sql.GraftColumnBridge.checkpointRdd(e.getValue)
-          .foreach(r => try r.unpersist(false) catch { case _: Throwable => () })
+        CheckpointRegistry.free(e.getValue)
         it.remove()
       }
     }

@@ -40,10 +40,10 @@ object Mis {
   @volatile private[graft] var lastConvergenceRound: Int = -1
 
   def mis(spark: SparkSession, edgesRaw: DataFrame): DataFrame =
-    LoopConf.pinned(spark, org.apache.spark.sql.GraftColumnBridge.memoCount(edgesRaw)) { misPinned(spark, edgesRaw) }
+    Superstep.pinned(spark, org.apache.spark.sql.GraftColumnBridge.memoCount(edgesRaw)) { misPinned(spark, edgesRaw) }
 
   private def misPinned(spark: SparkSession, edgesRaw: DataFrame): DataFrame = {
-    import org.apache.spark.sql.GraftColumnBridge
+    import CheckpointRegistry.{ckpt, free, keep}
     import graft.graph.CitationGraph.bidirectional
 
     // dst-partitioned: every round's FIRST join (the neighbor-priority
@@ -51,22 +51,13 @@ object Mis {
     // join leaves the next round's edges dst-partitioned too — with the
     // former src partitioning the first round reshuffled the full edge
     // list for nothing (guide §2.4)
-    val e0 = bidirectional(edgesRaw)
-      .repartition(col("dst"))
-      .localCheckpoint(true)
-    var edges = e0
-    // fused checkpoint+count (ckptCounted): one job materializes AND
-    // counts — the eager ckpt + fastCount pair was two scheduler
-    // round-trips per step (guide §1.2)
-    val (active0, nActive0, _) = GraftColumnBridge.ckptCounted(
-      e0.select(col("src").as("id")).distinct()
-        .withColumn("h", md5(col("id").cast("string")))
-        .repartition(col("id")))
-    var active = active0
-    var prevEdges = edges
-    var prevActive = active
+    var edges = ckpt(bidirectional(edgesRaw).repartition(col("dst"))).df
+    val active0 = ckpt(edges.select(col("src").as("id")).distinct()
+      .withColumn("h", md5(col("id").cast("string")))
+      .repartition(col("id")))
+    var active = active0.df
+    var nActive = active0.rows
     val winnerFrames = scala.collection.mutable.ArrayBuffer[DataFrame]()
-    var nActive = nActive0
     var r = 0
     while (nActive > 0) {
       r += 1
@@ -76,33 +67,26 @@ object Mis {
         .join(active.select(col("id").as("dst"), col("h").as("hd")), "dst")
         .groupBy(col("src")).agg(min(col("hd")).as("nh"))
         .select(col("src").as("id"), col("nh"))
-      val winners = active.join(nmin, Seq("id"), "left")
-        .filter(col("nh").isNull || col("h") < col("nh"))
-        .select(col("id"), lit(r.toLong).as("round"))
-        .localCheckpoint(true)
-      winnerFrames += winners
       // winners' checkpoints back the final result until it is consumed
-      CheckpointRegistry.trackFinal(spark, winners)
+      val winners = keep(spark, ckpt(active.join(nmin, Seq("id"), "left")
+        .filter(col("nh").isNull || col("h") < col("nh"))
+        .select(col("id"), lit(r.toLong).as("round"))).df)
+      winnerFrames += winners
       val nbrs = edges
         .join(winners.select(col("id").as("src")), Seq("src"), "left_semi")
         .select(col("dst").as("id"))
       val removed = winners.select(col("id")).union(nbrs).distinct()
-      val (nextActive, nNextActive, _) = GraftColumnBridge.ckptCounted(
-        active.join(removed, Seq("id"), "left_anti"))
-      val nextEdges = edges
-        .join(nextActive.select(col("id").as("src")), Seq("src"), "left_semi")
-        .join(nextActive.select(col("id").as("dst")), Seq("dst"), "left_semi")
-        .select(col("src"), col("dst"))
-        .localCheckpoint(true)
-      nActive = nNextActive
-      GraftColumnBridge.checkpointRdd(prevActive).foreach(_.unpersist(false))
-      GraftColumnBridge.checkpointRdd(prevEdges).foreach(_.unpersist(false))
-      active = nextActive; prevActive = nextActive
-      edges = nextEdges; prevEdges = nextEdges
+      val nextActive = ckpt(active.join(removed, Seq("id"), "left_anti"))
+      val nextEdges = ckpt(edges
+        .join(nextActive.df.select(col("id").as("src")), Seq("src"), "left_semi")
+        .join(nextActive.df.select(col("id").as("dst")), Seq("dst"), "left_semi")
+        .select(col("src"), col("dst"))).df
+      free(active); free(edges)
+      active = nextActive.df; nActive = nextActive.rows
+      edges = nextEdges
     }
     lastConvergenceRound = r
-    GraftColumnBridge.checkpointRdd(prevActive).foreach(_.unpersist(false))
-    GraftColumnBridge.checkpointRdd(prevEdges).foreach(_.unpersist(false))
+    free(active); free(edges)
     if (winnerFrames.isEmpty)
       spark.range(0).select(col("id"), col("id").as("round"))
     else winnerFrames.reduce(_ union _)

@@ -60,7 +60,7 @@ object Mst {
         (lit(1L) + (col("u") + col("v")) % lit(10L)).as("w"))
 
   def mst(spark: SparkSession, edgesRaw: DataFrame): DataFrame =
-    LoopConf.pinned(spark, org.apache.spark.sql.GraftColumnBridge.memoCount(edgesRaw)) { pinned(spark, edgesRaw) }
+    Superstep.pinned(spark, org.apache.spark.sql.GraftColumnBridge.memoCount(edgesRaw)) { pinned(spark, edgesRaw) }
 
   private def pinned(spark: SparkSession, edgesRaw: DataFrame): DataFrame = {
     import org.apache.spark.sql.GraftColumnBridge
@@ -71,30 +71,21 @@ object Mst {
     // math — the g_truss_decomp lesson, hit again here live (the sf0.01
     // probe wedged at 100% driver CPU before this rewrap).
     val ckpts = scala.collection.mutable.Map[DataFrame, DataFrame]()
-    def ckpt(df: DataFrame): DataFrame = {
-      val c = df.localCheckpoint(true)
-      val clean = GraftColumnBridge.statsClean(c)
-      ckpts(clean) = c
-      clean
+    def ckptClean(df: DataFrame, stat: CheckpointRegistry.Stat = CheckpointRegistry.Rows)
+        : CheckpointRegistry.Ckpt = {
+      val c = CheckpointRegistry.ckpt(df, stat)
+      val clean = GraftColumnBridge.statsClean(c.df)
+      ckpts(clean) = c.df
+      c.copy(df = clean)
     }
-    // fused checkpoint+count: ONE job materializes the frame AND returns
-    // the row / true-flag count (the eager-ckpt + fastCount/countTrue
-    // pair was two scheduler round-trips per loop step — guide §1.2,
-    // VERDICT r13 next-round #1: cut jobs-per-round in the loops)
-    def ckptN(df: DataFrame, boolCol: String = null): (DataFrame, Long, Long) = {
-      val (c, n, t) = GraftColumnBridge.ckptCounted(df, boolCol)
-      val clean = GraftColumnBridge.statsClean(c)
-      ckpts(clean) = c
-      (clean, n, t)
-    }
-    def free(df: DataFrame): Unit =
-      ckpts.remove(df).foreach(c =>
-        GraftColumnBridge.checkpointRdd(c).foreach(_.unpersist(false)))
+    def free(df: DataFrame): Unit = ckpts.remove(df).foreach(CheckpointRegistry.free)
 
     // live edges in component space, carrying original endpoints
-    var (live, nLive, _) = ckptN(canonical(edgesRaw)
+    val live0 = ckptClean(canonical(edgesRaw)
       .select(col("u").as("ca"), col("v").as("cb"),
         col("w"), col("u").as("ou"), col("v").as("ov")))
+    var live = live0.df
+    var nLive = live0.rows
     val picked = scala.collection.mutable.ArrayBuffer[DataFrame]()
     // per-round selection checkpoints, kept alive until the RESULT is
     // consumed (picked reads them lazily); registered with the
@@ -110,12 +101,12 @@ object Mst {
         col("w"), col("ou"), col("ov"))
       val fromB = live.select(col("cb").as("c"), col("ca").as("other"),
         col("w"), col("ou"), col("ov"))
-      val sel = ckpt(fromA.union(fromB)
+      val sel = ckptClean(fromA.union(fromB)
         .groupBy(col("c"))
         .agg(min(struct(col("w"), col("ou"), col("ov"), col("other")))
           .as("m"))
         .select(col("c"), col("m.other").as("partner"),
-          col("m.w").as("w"), col("m.ou").as("ou"), col("m.ov").as("ov")))
+          col("m.w").as("w"), col("m.ou").as("ou"), col("m.ov").as("ov"))).df
       keptSels += sel
       // selected ORIGINAL edges: served LAZILY from the sel checkpoint
       // (kept alive until the result is consumed) — the per-round
@@ -162,20 +153,19 @@ object Mst {
       while (jumping && jumps < JumpsUnroll) {
         jumps += 1
         // ONE job per jump: the checkpoint materialization counts the
-        // moved flags as it caches (ckptCounted) — previously the eager
-        // checkpoint job + a countTrue cached-scan job per jump
-        val (nextFull, _, moved) = ckptN(jump(p), "chg")
+        // moved flags as it caches
+        val next = ckptClean(jump(p), CheckpointRegistry.Flagged("chg"))
         if (pFull != null) free(pFull)
-        pFull = nextFull
+        pFull = next.df
         p = pFull.select(col("c"), col("p"))
-        if (moved == 0) jumping = false
+        if (next.stat == 0) jumping = false
       }
       // the loop only exits converged (moved == 0) or at the unroll
       // bound — the latter without proof of fixpoint fails the gate
       if (jumping) jumpsConverged = false
       // relabel live edges into merged-component space; drop loops.
       // Materialization and the live-edge count fuse into one job.
-      val (nextLive, nNext, _) = ckptN(live
+      val nextLive = ckptClean(live
         .join(p.select(col("c").as("ca"), col("p").as("na")), Seq("ca"), "left")
         .join(p.select(col("c").as("cb"), col("p").as("nb")), Seq("cb"), "left")
         .select(coalesce(col("na"), col("ca")).as("ca"),
@@ -185,14 +175,14 @@ object Mst {
         .distinct())
       if (pFull != null) free(pFull)
       free(live)
-      live = nextLive
-      nLive = nNext
+      live = nextLive.df
+      nLive = nextLive.rows
     }
     free(live)
     // the kept selection checkpoints back the lazy picked frames —
     // hand them to the registry (runners release after materializing)
     keptSels.foreach { s =>
-      ckpts.remove(s).foreach(c => CheckpointRegistry.trackFinal(spark, c))
+      ckpts.remove(s).foreach(CheckpointRegistry.keep(spark, _))
     }
     lastRounds = rounds
     lastJumpsConverged = jumpsConverged

@@ -34,26 +34,12 @@ object PageRank {
   /** Damping factor 0.85 as an integer percent. */
   val DampPct = 85L
 
-  /** Checkpoint cadence. Round 7 re-measured after two changes that
-    * reshuffled the old curve: (a) the loop joins are shuffle-hash (no
-    * per-round sorts), so batching rounds saves less; (b) the probe and
-    * Bench now warm the superstep codepath on sf0.001 first — PrProfile
-    * showed ~6.3s of every earlier "cold" number was one-time loop
-    * codegen/JIT, which is why round 6's cadence A/B (8.3/7.2/7.4/8.8s
-    * for 1/2/3/5) barely separated: it was measuring the warmup, not
-    * the knob. Warmed cold at sf0.1 per-JVM (CadenceProbe, round 7):
-    * every=1 4.19/4.25s, every=2 4.59s, every=3 5.67s, every=5 6.85s —
-    * a clean monotone curve; with hash joins, deeper nested plans only
-    * add planning+codegen (each extra depth is a NEW generated class).
-    * 1 wins. */
-  val CkptEvery = 1
-
   @volatile private[graft] var lastIterationExchanges: Int = -1
 
   def pageRank(spark: SparkSession, edgesRaw: DataFrame,
-      iters: Int = 10, ckptEvery: Int = CkptEvery): DataFrame =
-    LoopConf.pinned(spark, org.apache.spark.sql.GraftColumnBridge.memoCount(edgesRaw)) {
-      pageRankPinned(spark, edgesRaw, iters, ckptEvery, seedMax = None)
+      iters: Int = 10): DataFrame =
+    Superstep.pinned(spark, org.apache.spark.sql.GraftColumnBridge.memoCount(edgesRaw)) {
+      pageRankPinned(edgesRaw, iters, seedMax = None)
     }
 
   /** Personalized PageRank: teleport mass restarts at the SEED SET
@@ -66,9 +52,9 @@ object PageRank {
     * vertex a seed it degenerates to pageRank bit-for-bit (asserted in
     * PageRankSpec). */
   def personalizedPageRank(spark: SparkSession, edgesRaw: DataFrame,
-      seedMax: Long, iters: Int = 10, ckptEvery: Int = CkptEvery): DataFrame =
-    LoopConf.pinned(spark, org.apache.spark.sql.GraftColumnBridge.memoCount(edgesRaw)) {
-      pageRankPinned(spark, edgesRaw, iters, ckptEvery, seedMax = Some(seedMax))
+      seedMax: Long, iters: Int = 10): DataFrame =
+    Superstep.pinned(spark, org.apache.spark.sql.GraftColumnBridge.memoCount(edgesRaw)) {
+      pageRankPinned(edgesRaw, iters, seedMax = Some(seedMax))
     }
 
   /** Warm-start PageRank: run `iters` rounds of the SAME exact-integer
@@ -85,17 +71,15 @@ object PageRank {
     * negative result, pinned in PageRankSpec so it can't silently rot
     * into a false claim. Per-round cost and plan shape are unchanged. */
   def pageRankWarm(spark: SparkSession, edgesRaw: DataFrame,
-      init: DataFrame, iters: Int, ckptEvery: Int = CkptEvery): DataFrame =
-    LoopConf.pinned(spark, org.apache.spark.sql.GraftColumnBridge.memoCount(edgesRaw)) {
-      pageRankPinned(spark, edgesRaw, iters, ckptEvery, seedMax = None,
+      init: DataFrame, iters: Int): DataFrame =
+    Superstep.pinned(spark, org.apache.spark.sql.GraftColumnBridge.memoCount(edgesRaw)) {
+      pageRankPinned(edgesRaw, iters, seedMax = None,
         warmFrom = Some(init))
     }
 
-  private def pageRankPinned(spark: SparkSession, edgesRaw: DataFrame,
-      iters: Int, ckptEvery: Int, seedMax: Option[Long],
+  private def pageRankPinned(edgesRaw: DataFrame,
+      iters: Int, seedMax: Option[Long],
       warmFrom: Option[DataFrame] = None): DataFrame = {
-    import org.apache.spark.sql.GraftColumnBridge
-
     val e = edgesRaw.select(col("src"), col("dst"))
       .filter(col("src") =!= col("dst")).distinct()
       .repartition(col("src"))
@@ -135,7 +119,7 @@ object PageRank {
             lit(((100L - DampPct) * Scale) / (100L * nS))).otherwise(lit(0L)))
     }
 
-    var r = warmFrom match {
+    val r0 = warmFrom match {
       case None => v.select(col("id"), r0Col.as("r"))
       case Some(init) =>
         // standing ranks where known; the new graph's uniform mass for
@@ -143,9 +127,7 @@ object PageRank {
         v.join(init.select(col("id"), col("r").as("r0")), Seq("id"), "left")
           .select(col("id"), coalesce(col("r0"), lit(Scale / n)).as("r"))
     }
-    var prevCkpt: Option[DataFrame] = None
-    var sinceCkpt = 0
-    for (k <- 1 to iters) {
+    val out = Superstep.iterate(r0, iters) { (r, _) =>
       // shuffle-hash, build side = the vertex-sized frame, on BOTH loop
       // joins: the r6 merge-hint shape re-sorted rank state and the
       // static edge table every iteration (SMJ sorts are per-iteration
@@ -155,31 +137,16 @@ object PageRank {
       val contrib = r.hint("shuffle_hash").join(ed, col("id") === col("src"))
         .groupBy(col("dst"))
         .agg(sum(expr("r div d")).as("contrib"))
-      val nextDs = v.join(contrib.hint("shuffle_hash"), col("id") === col("dst"), "left")
+      val next = v.join(contrib.hint("shuffle_hash"), col("id") === col("dst"), "left")
         .select(col("id"),
           (baseCol + expr(s"($DampPct * coalesce(contrib, 0L)) div 100")).as("r"))
-      // capture the per-superstep exchange count on rounds that start
-      // from materialized state (a nested round's plan embeds the prior
-      // rounds' exchanges, so its count is the batch's, not one round's)
-      if (sinceCkpt == 0)
-        lastIterationExchanges = nextDs.queryExecution.executedPlan.collect {
-          case x: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => x
-        }.size
-      sinceCkpt += 1
-      if (sinceCkpt == ckptEvery || k == iters) {
-        val next = nextDs.localCheckpoint(true)
-        prevCkpt.foreach(p =>
-          GraftColumnBridge.checkpointRdd(p).foreach(_.unpersist(false)))
-        prevCkpt = Some(next)
-        r = next
-        sinceCkpt = 0
-      } else r = nextDs
+      lastIterationExchanges = next.queryExecution.executedPlan.collect {
+        case x: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => x
+      }.size
+      next
     }
     v.unpersist(false); ed.unpersist(false)
-    // final checkpoint backs the lazy result; the runner releases it via
-    // CheckpointRegistry once the result is materialized
-    prevCkpt.foreach(CheckpointRegistry.trackFinal(spark, _))
-    r
+    out
   }
 
   // ---- registry entry ---------------------------------------------------

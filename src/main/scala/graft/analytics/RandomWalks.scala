@@ -20,14 +20,16 @@ import graft.registry.Q
   * md5 is injective on the distinct key strings in practice, and ids
   * contain no '|'). Walks stop early at sinks (no out-edges).
   *
-  * Scale shape: walk state is one row per seed — a BROADCAST against
+  * Scale shape: the walk heads are one row per seed — a BROADCAST against
   * the edge table every step, so each superstep is one broadcast hash
   * join + a seed-keyed min-aggregation (map-side combinable); the edge
-  * table is scanned from cache, never shuffled. State is
-  * localCheckpoint'ed per step (seed-count rows — pennies) so the
-  * emitted step frames don't chain-re-execute the join prefix when
-  * unioned. At 1000 executors the same plan holds: walks scale by
-  * adding seeds (rows in the broadcast), steps stay a fixed-depth loop.
+  * table is scanned from cache, never shuffled. The loop state is the
+  * walk so far, (wid, step, node) rows, checkpointed per step
+  * (seed-count x steps rows — pennies): each step appends the next
+  * node of every live walk, so the final round IS the result and no
+  * step re-executes the join prefix. At 1000 executors the same plan
+  * holds: walks scale by adding seeds (rows in the broadcast), steps
+  * stay a fixed-depth loop.
   */
 object RandomWalks {
 
@@ -38,41 +40,27 @@ object RandomWalks {
 
   def walks(spark: SparkSession, edgesRaw: DataFrame,
       walkLen: Int = WalkLen, seedMax: Long = SeedMax): DataFrame = {
-    import org.apache.spark.sql.GraftColumnBridge
-
     val e = edgesRaw.select(col("src"), col("dst"))
       .filter(col("src") =!= col("dst")).distinct()
       .persist(StorageLevel.MEMORY_AND_DISK)
     e.count()
 
-    var st = e.select(col("src").as("wid"), col("src").as("cur"))
+    val walk0 = e.select(col("src").as("wid"), col("src").as("node"))
       .filter(col("wid") < seedMax).distinct()
-      .localCheckpoint(true)
-    val frames = scala.collection.mutable.ArrayBuffer[DataFrame]()
-    frames += st.select(col("wid"), lit(0L).as("step"),
-      col("cur").as("node"))
-    CheckpointRegistry.trackFinal(spark, st)
-    var prev = st
-    for (k <- 1 to walkLen) {
-      val next = broadcast(st).join(e, col("cur") === col("src"))
+      .select(col("wid"), lit(0L).as("step"), col("node"))
+    val walk = Superstep.iterate(walk0, walkLen) { (walk, k) =>
+      val at = walk.filter(col("step") === (k - 1).toLong)
+      walk.union(broadcast(at).join(e, col("node") === col("src"))
         .groupBy(col("wid"))
         .agg(min(concat(
-          md5(concat_ws("|", col("wid"), lit(k.toLong), col("cur"),
+          md5(concat_ws("|", col("wid"), lit(k.toLong), col("node"),
             col("dst"))),
           lit("|"), col("dst"))).as("m"))
-        .select(col("wid"),
-          expr("CAST(split_part(m, '|', 2) AS BIGINT)").as("cur"))
-        .localCheckpoint(true)
-      // superseded state backs already-emitted frames via the registry;
-      // only release the previous checkpoint if nothing emitted from it
-      frames += next.select(col("wid"), lit(k.toLong).as("step"),
-        col("cur").as("node"))
-      CheckpointRegistry.trackFinal(spark, next)
-      st = next
-      prev = next
+        .select(col("wid"), lit(k.toLong).as("step"),
+          expr("CAST(split_part(m, '|', 2) AS BIGINT)").as("node")))
     }
     e.unpersist(false)
-    frames.reduce(_ union _)
+    walk
   }
 
   // ---- registry entry ---------------------------------------------------

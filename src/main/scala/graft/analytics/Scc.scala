@@ -54,44 +54,32 @@ object Scc {
   @volatile private[graft] var lastInputEdges: Long = -1L
 
   def scc(spark: SparkSession, edgesRaw: DataFrame): DataFrame =
-    LoopConf.pinned(spark, org.apache.spark.sql.GraftColumnBridge.memoCount(edgesRaw)) { sccPinned(spark, edgesRaw) }
+    Superstep.pinned(spark, org.apache.spark.sql.GraftColumnBridge.memoCount(edgesRaw)) { sccPinned(spark, edgesRaw) }
 
   private def sccPinned(spark: SparkSession, edgesRaw: DataFrame): DataFrame = {
-    import org.apache.spark.sql.GraftColumnBridge
+    import CheckpointRegistry.{Flagged, ckpt, free, keep}
 
-    def ckpt(df: DataFrame): DataFrame = df.localCheckpoint(true)
-    // fused checkpoint+count (GraftColumnBridge.ckptCounted): one job
-    // materializes AND counts — the eager ckpt + fastCount/countTrue
-    // pair was two scheduler round-trips per loop step (guide §1.2,
-    // VERDICT r13 next-round #1)
-    def ckptN(df: DataFrame): (DataFrame, Long) = {
-      val (c, n, _) = GraftColumnBridge.ckptCounted(df)
-      (c, n)
-    }
-    def free(df: DataFrame): Unit =
-      GraftColumnBridge.checkpointRdd(df).foreach(_.unpersist(false))
-
-    val (edges0, nEdges0) = ckptN(
+    val edges0 = ckpt(
       edgesRaw.select(col("src"), col("dst"))
         .filter(col("src") =!= col("dst")).distinct()
         .repartition(col("dst")))
-    var edges = edges0
+    var edges = edges0.df
     // src-partitioned twin of the live edge list: the forward flood
     // joins edges on src every round, and with only the dst-partitioned
     // copy the FULL edge list was reshuffled by src per flood round
     // (guide §2.4 share the exchange / Pregel practice: partition edges
     // once, route only messages). One extra checkpoint per trim/shrink
     // buys zero edge exchanges in all fwd rounds; bwd keeps the dst copy.
-    var edgesSrc = ckpt(edges.repartition(col("src")))
-    val (verts0, nVerts0) = ckptN(
+    var edgesSrc = ckpt(edges.repartition(col("src"))).df
+    val verts0 = ckpt(
       edges.select(col("src").as("id"))
         .union(edges.select(col("dst").as("id"))).distinct()
         .repartition(col("id")))
-    var verts = verts0
+    var verts = verts0.df
 
     val sccFrames = scala.collection.mutable.ArrayBuffer[DataFrame]()
-    var nActive = nVerts0
-    lastInputEdges = nEdges0
+    var nActive = verts0.rows
+    lastInputEdges = edges0.rows
     var outer = 0
     var maxFwd = 0
     var maxBwd = 0
@@ -112,29 +100,27 @@ object Scc {
     // round would assign (the root is the max member id), so the
     // unrolled no-trim oracle still matches value for value.
     def trim(): Unit = {
-      // A/B kill-switch for SccProbe measurement only (on by default)
-      if (!sys.props.getOrElse("graft.scc.trim", "true").toBoolean) return
       var go = nActive > 0
       while (go) {
-        val (nextVerts, nNext) = ckptN(verts
+        val next = ckpt(verts
           .join(edges.select(col("src").as("id")), Seq("id"), "left_semi")
           .join(edges.select(col("dst").as("id")), Seq("id"), "left_semi"))
-        if (nNext == nActive) { free(nextVerts); go = false }
+        val nextVerts = next.df
+        if (next.rows == nActive) { free(nextVerts); go = false }
         else {
           trimRounds += 1
-          val assigned = ckpt(verts.join(nextVerts, Seq("id"), "left_anti")
-            .select(col("id"), col("id").as("scc_id")))
+          val assigned = keep(spark, ckpt(verts.join(nextVerts, Seq("id"), "left_anti")
+            .select(col("id"), col("id").as("scc_id"))).df)
           sccFrames += assigned
-          CheckpointRegistry.trackFinal(spark, assigned)
-          trimmed += nActive - nNext
+          trimmed += nActive - next.rows
           val nextEdges = ckpt(edges
             .join(nextVerts.select(col("id").as("src")), Seq("src"), "left_semi")
             .join(nextVerts.select(col("id").as("dst")), Seq("dst"), "left_semi")
-            .select(col("src"), col("dst")))
+            .select(col("src"), col("dst"))).df
           free(verts); free(edges); free(edgesSrc)
           verts = nextVerts; edges = nextEdges
-          edgesSrc = ckpt(edges.repartition(col("src")))
-          nActive = nNext
+          edgesSrc = ckpt(edges.repartition(col("src"))).df
+          nActive = next.rows
           go = nActive > 0
         }
       }
@@ -162,26 +148,19 @@ object Scc {
             greatest(col("c"), coalesce(col("mc"), col("c"))).as("c"),
             (col("mc").isNotNull && col("mc") > col("c")).as("chg"))
       }
-      var colorFull = ckpt(verts.select(col("id"), col("id").as("c"),
-        lit(false).as("chg")))
-      var color = colorFull.select(col("id"), col("c"))
-      var changed = 1L
-      var fwd = 0
-      while (changed > 0) {
-        fwd += 1
-        // ONE job per flood round: materialization counts the changed
-        // flags as it caches (previously ckpt + countTrue = two jobs)
-        val (nextFull, _, nChg) = GraftColumnBridge.ckptCounted(fwdStep(color), "chg")
-        changed = nChg
-        free(colorFull); colorFull = nextFull
-        color = colorFull.select(col("id"), col("c"))
+      // ONE job per flood round: materialization counts the changed
+      // flags as it caches
+      val fwd = Superstep.untilFixpoint(
+          ckpt(verts.select(col("id"), col("id").as("c"))), Flagged("chg")) {
+        full => fwdStep(full.select(col("id"), col("c")))
       }
-      maxFwd = math.max(maxFwd, fwd)
+      val color = fwd.df.select(col("id"), col("c"))
+      maxFwd = math.max(maxFwd, fwd.rounds)
       // 2+3. backward flood inside color classes from the roots
       // u joins when some edge u->w has w a member and color(u)==color(w);
       // one membership step per checkpoint (the stride-2 negative
       // result above applies here identically — member is consumed
-      // twice per step)
+      // twice per step); the round's row count is the convergence test
       def bwdStep(member: DataFrame): DataFrame = {
         val newFrontier = member.select(col("id").as("dst"), col("c"))
           .join(edges, "dst")
@@ -191,38 +170,23 @@ object Scc {
           .select(col("id"), col("c"))
         member.union(newFrontier).distinct()
       }
-      val (member0, nMember0) = ckptN(color.filter(col("id") === col("c"))
-        .select(col("id"), col("c")))
-      var member = member0
-      var nMember = nMember0
-      changed = 1L
-      var bwd = 0
-      while (changed > 0) {
-        bwd += 1
-        // one fused job per membership round; the previous count is
-        // carried in a var (re-counting the cached previous checkpoint
-        // was one more scheduler round-trip per round)
-        val (nextM, nNext) = ckptN(bwdStep(member))
-        changed = nNext - nMember
-        nMember = nNext
-        free(member); member = nextM
-      }
-      maxBwd = math.max(maxBwd, bwd)
-      val assigned = ckpt(member.select(col("id"), col("c").as("scc_id")))
+      val bwd = Superstep.untilFixpoint(ckpt(color.filter(col("id") === col("c"))
+        .select(col("id"), col("c"))))(bwdStep)
+      maxBwd = math.max(maxBwd, bwd.rounds)
+      val assigned = keep(spark,
+        ckpt(bwd.df.select(col("id"), col("c").as("scc_id"))).df)
       sccFrames += assigned
-      CheckpointRegistry.trackFinal(spark, assigned)
-      free(member); free(colorFull)
+      free(bwd.df); free(fwd.df)
       // 4. shrink the live subgraph (vertex materialization + count fused)
-      val (nextVerts, nNextVerts) = ckptN(verts.join(assigned.select(col("id")),
-        Seq("id"), "left_anti"))
+      val next = ckpt(verts.join(assigned.select(col("id")), Seq("id"), "left_anti"))
       val nextEdges = ckpt(edges
-        .join(nextVerts.select(col("id").as("src")), Seq("src"), "left_semi")
-        .join(nextVerts.select(col("id").as("dst")), Seq("dst"), "left_semi")
-        .select(col("src"), col("dst")))
+        .join(next.df.select(col("id").as("src")), Seq("src"), "left_semi")
+        .join(next.df.select(col("id").as("dst")), Seq("dst"), "left_semi")
+        .select(col("src"), col("dst"))).df
       free(verts); free(edges); free(edgesSrc)
-      verts = nextVerts; edges = nextEdges
-      edgesSrc = ckpt(edges.repartition(col("src")))
-      nActive = nNextVerts
+      verts = next.df; edges = nextEdges
+      edgesSrc = ckpt(edges.repartition(col("src"))).df
+      nActive = next.rows
       trim()
     }
     free(verts); free(edges); free(edgesSrc)
@@ -311,8 +275,8 @@ object Scc {
 
   def assignmentFor(spark: SparkSession, dir: String): DataFrame =
     assignCache.computeIfAbsent((graft.SessionKey(spark), dir), _ => {
-      val a = scc(spark, graft.graph.CitationGraph.edges(spark, dir))
-        .localCheckpoint(true)
+        val a = CheckpointRegistry.ckpt(
+        scc(spark, graft.graph.CitationGraph.edges(spark, dir))).df
       require(lastOuterRounds <= OuterDepth &&
         lastMaxFwdRounds <= FwdDepth && lastMaxBwdRounds <= BwdDepth,
         s"g_scc converged in (outer=$lastOuterRounds, fwd=$lastMaxFwdRounds, " +
@@ -329,8 +293,7 @@ object Scc {
     while (it.hasNext) {
       val e = it.next()
       if (e.getKey._1 == sid) {
-        org.apache.spark.sql.GraftColumnBridge.checkpointRdd(e.getValue)
-          .foreach(r => try r.unpersist(false) catch { case _: Throwable => () })
+        CheckpointRegistry.free(e.getValue)
         it.remove()
       }
     }

@@ -13,9 +13,9 @@ import graft.registry.Q
   * reproduces exactly (distances are BIGINT sums of BIGINT weights —
   * no float accumulation, bit-identical across engines and layouts).
   *
-  * Same pinned layout as PageRank (LoopConf): edges shuffled onto src
-  * once, state id-partitioned, one exchange per round (the relaxation
-  * min-aggregation), checkpoint cadence measured per-operator (CkptEvery).
+  * Same pinned layout as PageRank (Superstep.iterate): edges shuffled
+  * onto src once, state id-partitioned, one exchange per round (the
+  * relaxation min-aggregation).
   */
 object ShortestPaths {
 
@@ -27,66 +27,36 @@ object ShortestPaths {
     e.select(col("src"), col("dst"),
       (lit(1L) + (col("src") + col("dst")) % lit(10L)).as("w"))
 
-  /** Relaxation rounds per checkpoint. MEASURED cold per-JVM at sf0.1
-    * (CadenceProbe -sssp, 2 reps): every=1 7.7/6.9s, every=2 7.6/7.7s,
-    * every=3 9.0/9.5s — the long-standing default of 3 was the WORST:
-    * like k-core (and unlike PageRank), each round references state
-    * twice (cand derives from st, then st joins cand), so nesting
-    * re-evaluates more than the skipped materializations save. */
-  val CkptEvery = 1
-
   def sssp(spark: SparkSession, edgesRaw: DataFrame, source: Long,
-      rounds: Int = 10, ckptEvery: Int = CkptEvery): DataFrame =
-    LoopConf.pinned(spark, org.apache.spark.sql.GraftColumnBridge.memoCount(edgesRaw)) {
-      ssspPinned(spark, edgesRaw, source, rounds, ckptEvery)
+      rounds: Int = 10): DataFrame =
+    Superstep.pinned(spark, org.apache.spark.sql.GraftColumnBridge.memoCount(edgesRaw)) {
+      val e = weighted(
+        edgesRaw.select(col("src"), col("dst"))
+          .filter(col("src") =!= col("dst")).distinct())
+        .repartition(col("src"))
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      val v = e.select(col("src").as("id"))
+        .union(e.select(col("dst").as("id"))).distinct()
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      v.count()
+      // dist is NULL while unreached; min() ignores NULLs on both engines
+      val st0 = v.select(col("id"),
+        when(col("id") === source, lit(0L)).as("dist"))
+      val out = Superstep.iterate(st0, rounds) { (st, _) =>
+        val cand = st.join(e, col("id") === col("src"))
+          .groupBy(col("dst"))
+          .agg(min(col("dist") + col("w")).as("cand"))
+        st.hint("merge").join(cand, col("id") === col("dst"), "left")
+          .select(col("id"),
+            when(col("dist").isNull, col("cand"))
+              .when(col("cand").isNull, col("dist"))
+              .otherwise(least(col("dist"), col("cand"))).as("dist"))
+      }
+      e.unpersist(false); v.unpersist(false)
+      // only reached vertices: NULL-bearing numeric output would break the
+      // strict gate, and an unreached vertex has no distance to report
+      out.filter(col("dist").isNotNull)
     }
-
-  private def ssspPinned(spark: SparkSession, edgesRaw: DataFrame,
-      source: Long, rounds: Int, ckptEvery: Int): DataFrame = {
-    import org.apache.spark.sql.GraftColumnBridge
-
-    val e = weighted(
-      edgesRaw.select(col("src"), col("dst"))
-        .filter(col("src") =!= col("dst")).distinct())
-      .repartition(col("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val v = e.select(col("src").as("id"))
-      .union(e.select(col("dst").as("id"))).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    v.count()
-
-    // dist is NULL while unreached; min() ignores NULLs on both engines
-    var st = v.select(col("id"),
-      when(col("id") === source, lit(0L)).as("dist"))
-    var prevCkpt: Option[DataFrame] = None
-    var sinceCkpt = 0
-    for (k <- 1 to rounds) {
-      val cand = st.join(e, col("id") === col("src"))
-        .groupBy(col("dst"))
-        .agg(min(col("dist") + col("w")).as("cand"))
-      val nextDs = st.hint("merge").join(cand, col("id") === col("dst"), "left")
-        .select(col("id"),
-          when(col("dist").isNull, col("cand"))
-            .when(col("cand").isNull, col("dist"))
-            .otherwise(least(col("dist"), col("cand"))).as("dist"))
-      sinceCkpt += 1
-      if (sinceCkpt == ckptEvery || k == rounds) {
-        val next = nextDs.localCheckpoint(true)
-        prevCkpt.foreach(p =>
-          GraftColumnBridge.checkpointRdd(p).foreach(_.unpersist(false)))
-        prevCkpt = Some(next)
-        st = next
-        sinceCkpt = 0
-      } else st = nextDs
-    }
-    e.unpersist(false); v.unpersist(false)
-    // final checkpoint backs the lazy result; the runner releases it via
-    // CheckpointRegistry once the result is materialized
-    prevCkpt.foreach(CheckpointRegistry.trackFinal(spark, _))
-    // only reached vertices: NULL-bearing numeric output would break the
-    // strict gate, and an unreached vertex has no distance to report
-    st.filter(col("dist").isNotNull)
-  }
 
   // ---- registry entry ---------------------------------------------------
 

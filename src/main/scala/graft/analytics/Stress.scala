@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.registry.Q
+import CheckpointRegistry.{ckpt, free, keep}
 
 /** Sampled stress centrality (Shimbel 1953; the path-COUNT sibling of
   * betweenness) — "how many shortest paths ride through this vertex" —
@@ -45,12 +46,6 @@ object Stress {
   @volatile private[graft] var lastMaxSigma: Long = -1
   @volatile private[graft] var lastMaxTail: Long = -1
 
-  private def ckpt(df: DataFrame): DataFrame = df.localCheckpoint(true)
-  private def free(df: DataFrame): Unit = {
-    import org.apache.spark.sql.GraftColumnBridge
-    GraftColumnBridge.checkpointRdd(df).foreach(_.unpersist(false))
-  }
-
   /** Deduped, self-loop-free, src-repartitioned edge frame — the layout
     * every phase joins against. NOT checkpointed here (callers decide
     * whether it is transient or session-pinned). */
@@ -73,17 +68,14 @@ object Stress {
     val verts = e.select(col("src").as("id"))
       .union(e.select(col("dst").as("id"))).distinct()
 
-    // reached (s, v, d, sig); frontier = rows at depth k-1.
-    // Fused checkpoint+count (ckptCounted): materialization counts as it
-    // caches, and the per-level comparison carries the previous count in
-    // a var — the former fastCount pair was two extra cached-scan jobs
-    // per BFS level (guide §1.2).
-    val (reached0, nReached0, _) = org.apache.spark.sql.GraftColumnBridge
-      .ckptCounted(verts.filter(col("id") < sourceMax)
-        .select(col("id").as("s"), col("id").as("v"),
-          lit(0L).as("d"), lit(1L).as("sig")))
-    var reached = reached0
-    var nReached = nReached0
+    // reached (s, v, d, sig); frontier = rows at depth k-1. The
+    // materializing job counts the rows, and the per-level comparison
+    // carries the previous count in a var.
+    val reached0 = ckpt(verts.filter(col("id") < sourceMax)
+      .select(col("id").as("s"), col("id").as("v"),
+        lit(0L).as("d"), lit(1L).as("sig")))
+    var reached = reached0.df
+    var nReached = reached0.rows
     // early-stop on an empty frontier: rounds past the BFS fixpoint are
     // idempotent (the unrolled oracle runs all of them and matches);
     // maxDepth then bounds the backward iterations needed (T_i is exact
@@ -101,11 +93,10 @@ object Stress {
           Seq("s", "v"), "left_anti")
         .select(col("s"), col("v"), lit(k.toLong).as("d"),
           col("nsig").as("sig"))
-      val (next, nNext, _) = org.apache.spark.sql.GraftColumnBridge
-        .ckptCounted(reached.union(fresh))
-      if (nNext == nReached) frontierEmpty = true
+      val next = ckpt(reached.union(fresh))
+      if (next.rows == nReached) frontierEmpty = true
       else maxDepth = k
-      free(reached); reached = next; nReached = nNext
+      free(reached); reached = next.df; nReached = next.rows
       k += 1
     }
     (reached, maxDepth, frontierEmpty)
@@ -113,13 +104,25 @@ object Stress {
 
   def stress(spark: SparkSession, edgesRaw: DataFrame,
       sourceMax: Long = SourceMax, rounds: Int = Rounds): DataFrame =
-    LoopConf.pinned(spark, org.apache.spark.sql.GraftColumnBridge.memoCount(edgesRaw)) {
-      val e = ckpt(prep(edgesRaw))
+    Superstep.pinned(spark, org.apache.spark.sql.GraftColumnBridge.memoCount(edgesRaw)) {
+      val e = ckpt(prep(edgesRaw)).df
       val (reached, maxDepth, _) = forward(spark, e, sourceMax, rounds)
       val out = backward(spark, e, reached, maxDepth, rounds)
       free(e)
-      CheckpointRegistry.trackFinal(spark, reached)
+      keep(spark, reached)
       out
+    }
+
+  /** Standalone forward levels over an arbitrary edge frame (specs,
+    * ad-hoc callers that only aggregate them): the kept (s, v, d, sig)
+    * level frame, nothing cached. */
+  private[analytics] def levels(spark: SparkSession, edgesRaw: DataFrame,
+      sourceMax: Long, rounds: Int): DataFrame =
+    Superstep.pinned(spark, org.apache.spark.sql.GraftColumnBridge.memoCount(edgesRaw)) {
+      val e = ckpt(prep(edgesRaw)).df
+      val (reached, _, _) = forward(spark, e, sourceMax, rounds)
+      free(e)
+      keep(spark, reached)
     }
 
   /** DAG derivation + backward tail accumulation + overflow gate. The
@@ -134,10 +137,10 @@ object Stress {
     val dag2 = ckpt(rFrom.join(e, col("u") === col("src"))
       .join(rTo, col("s") === col("s2") && col("dst") === col("w"))
       .filter(col("dw") === col("du") + 1L)
-      .select(col("s"), col("u"), col("w")))
+      .select(col("s"), col("u"), col("w"))).df
 
     // backward: T_0 = 1; T_i(v) = 1 + sum over DAG successors T_{i-1}(w)
-    var tail = ckpt(reached.select(col("s"), col("v"), lit(1L).as("t")))
+    var tail = ckpt(reached.select(col("s"), col("v"), lit(1L).as("t"))).df
     for (_ <- 1 to math.min(rounds, maxDepth + 1)) {
       // join DAG successors' current T onto each u
       val ss = dag2.join(
@@ -148,7 +151,7 @@ object Stress {
       val next = ckpt(reached.select(col("s"), col("v"))
         .join(ss.hint("shuffle_hash"), Seq("s", "v"), "left")
         .select(col("s"), col("v"),
-          (lit(1L) + coalesce(col("st"), lit(0L))).as("t")))
+          (lit(1L) + coalesce(col("st"), lit(0L))).as("t"))).df
       free(tail); tail = next
     }
 
@@ -169,7 +172,7 @@ object Stress {
       .groupBy(col("v")).agg(sum(col("sig") * col("t")).as("stress"))
       .select(col("v").as("id"), col("stress"))
     free(dag2)
-    CheckpointRegistry.trackFinal(spark, tail)
+    keep(spark, tail)
     out
   }
 
@@ -190,8 +193,8 @@ object Stress {
     levelsCache.computeIfAbsent((graft.SessionKey(spark), dir), _ => {
       val raw = graft.graph.CitationGraph.edges(spark, dir)
       val eCnt = raw.count()
-      LoopConf.pinned(spark, eCnt) {
-        val e = ckpt(prep(raw))
+      Superstep.pinned(spark, eCnt) {
+        val e = ckpt(prep(raw)).df
         val (reached, maxDepth, drained) = forward(spark, e, SourceMax, Rounds)
         (e, reached, maxDepth, eCnt, drained)
       }
@@ -211,8 +214,8 @@ object Stress {
     * bound. */
   def bfsDrained(spark: SparkSession, edgesRaw: DataFrame,
       sourceMax: Long = SourceMax, rounds: Int = Rounds): Boolean =
-    LoopConf.pinned(spark, org.apache.spark.sql.GraftColumnBridge.memoCount(edgesRaw)) {
-      val e = ckpt(prep(edgesRaw))
+    Superstep.pinned(spark, org.apache.spark.sql.GraftColumnBridge.memoCount(edgesRaw)) {
+      val e = ckpt(prep(edgesRaw)).df
       val (reached, _, drained) = forward(spark, e, sourceMax, rounds)
       free(e); free(reached)
       drained
@@ -244,7 +247,7 @@ object Stress {
   /** Registry path: backward phase over the session-cached levels. */
   def stressFor(spark: SparkSession, dir: String): DataFrame = {
     val (e, reached, maxDepth, eCnt, _) = levelsFor(spark, dir)
-    LoopConf.pinned(spark, eCnt) {
+    Superstep.pinned(spark, eCnt) {
       backward(spark, e, reached, maxDepth, Rounds)
     }
   }

@@ -21,7 +21,7 @@ import graft.registry.Q
   * the unrolled DuckDB twin reproduces exactly (arrivals are BIGINT day
   * numbers, min() is order-independent: bit-identical across engines).
   *
-  * Superstep layout is the SSSP discipline (LoopConf pinning, temporal
+  * Superstep layout is the SSSP discipline (Superstep.iterate, temporal
   * edges shuffled onto src once, state id-partitioned, one exchange per
   * round = the min-arrival aggregation, per-round localCheckpoint with
   * eager release of the superseded one). Temporal multiplicity is kept:
@@ -32,52 +32,37 @@ object TemporalReach {
 
   def earliestArrival(spark: SparkSession, tEdges: DataFrame, source: Long,
       rounds: Int = 10): DataFrame =
-    LoopConf.pinned(spark, org.apache.spark.sql.GraftColumnBridge.memoCount(tEdges)) {
-      pinned(spark, tEdges, source, rounds)
+    Superstep.pinned(spark, org.apache.spark.sql.GraftColumnBridge.memoCount(tEdges)) {
+      val e = tEdges.select(col("src"), col("dst"), col("t"))
+        .filter(col("src") =!= col("dst")).distinct()
+        .repartition(col("src"))
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      val v = e.select(col("src").as("id"))
+        .union(e.select(col("dst").as("id"))).distinct()
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      v.count()
+
+      // arrival is NULL while unreached; the source is reached at day 0
+      // (all activation days are >= 0: the corpus dates start at the epoch)
+      val st0 = v.select(col("id"),
+        when(col("id") === source, lit(0L)).as("arr"))
+      val out = Superstep.iterate(st0, rounds) { (st, _) =>
+        // time-respecting relaxation: only edges activating at or after
+        // the current arrival extend a journey; NULL arrivals drop in the
+        // filter on both engines
+        val cand = st.join(e, col("id") === col("src"))
+          .filter(col("t") >= col("arr"))
+          .groupBy(col("dst"))
+          .agg(min(col("t")).as("cand"))
+        st.join(cand.hint("shuffle_hash"), col("id") === col("dst"), "left")
+          .select(col("id"),
+            when(col("arr").isNull, col("cand"))
+              .when(col("cand").isNull, col("arr"))
+              .otherwise(least(col("arr"), col("cand"))).as("arr"))
+      }
+      e.unpersist(false); v.unpersist(false)
+      out.filter(col("arr").isNotNull)
     }
-
-  private def pinned(spark: SparkSession, tEdges: DataFrame,
-      source: Long, rounds: Int): DataFrame = {
-    import org.apache.spark.sql.GraftColumnBridge
-
-    val e = tEdges.select(col("src"), col("dst"), col("t"))
-      .filter(col("src") =!= col("dst")).distinct()
-      .repartition(col("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val v = e.select(col("src").as("id"))
-      .union(e.select(col("dst").as("id"))).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    v.count()
-
-    // arrival is NULL while unreached; the source is reached at day 0
-    // (all activation days are >= 0: the corpus dates start at the epoch)
-    var st = v.select(col("id"),
-      when(col("id") === source, lit(0L)).as("arr"))
-    var prevCkpt: Option[DataFrame] = None
-    for (k <- 1 to rounds) {
-      // time-respecting relaxation: only edges activating at or after
-      // the current arrival extend a journey; NULL arrivals drop in the
-      // filter on both engines
-      val cand = st.join(e, col("id") === col("src"))
-        .filter(col("t") >= col("arr"))
-        .groupBy(col("dst"))
-        .agg(min(col("t")).as("cand"))
-      val nextDs = st.join(cand.hint("shuffle_hash"),
-          col("id") === col("dst"), "left")
-        .select(col("id"),
-          when(col("arr").isNull, col("cand"))
-            .when(col("cand").isNull, col("arr"))
-            .otherwise(least(col("arr"), col("cand"))).as("arr"))
-      val next = nextDs.localCheckpoint(true)
-      prevCkpt.foreach(p =>
-        GraftColumnBridge.checkpointRdd(p).foreach(_.unpersist(false)))
-      prevCkpt = Some(next)
-      st = next
-    }
-    e.unpersist(false); v.unpersist(false)
-    prevCkpt.foreach(CheckpointRegistry.trackFinal(spark, _))
-    st.filter(col("arr").isNotNull)
-  }
 
   // ---- registry entry ---------------------------------------------------
 

@@ -1,6 +1,7 @@
 package graft.analytics
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.GraftColumnBridge.statsClean
 import org.apache.spark.sql.functions._
 
 import graft.registry.Q
@@ -61,66 +62,41 @@ object Truss {
       .select(col("ed.a").as("a"), col("ed.b").as("b"))
       .groupBy(col("a"), col("b")).agg(count(lit(1)).as("sup"))
 
-  /** Peel `e` (canonical a<b edges) to the k-truss fixpoint; returns
-    * the surviving edge set and reports (rounds, converged) via the
-    * callback. A loop that exhausts `maxRounds` while still shrinking
-    * reports converged = false — the registered query fails LOUDLY
-    * rather than shipping a non-fixpoint the oracle can't match. */
-  private def peel(spark: SparkSession, e0: DataFrame, k: Int,
-      maxRounds: Int)(report: (Int, Boolean) => Unit): DataFrame = {
-    import org.apache.spark.sql.GraftColumnBridge
-    var e = e0
-    var prev = e0
-    var n = GraftColumnBridge.fastCount(e)
-    var r = 0
-    var changed = n > 0
-    while (changed && r < maxRounds) {
-      r += 1
-      // fused checkpoint+count: one job materializes and counts (the
-      // eager ckpt + fastCount pair was two round-trips — guide §1.2)
-      val (next, nNext, _) = GraftColumnBridge.ckptCounted(
-        supportOf(e)
-          .filter(col("sup") >= k - 2)
-          .select(col("a"), col("b")))
-      changed = nNext != n
-      n = nNext
-      // e0 belongs to the caller — only free checkpoints this loop made
-      if (prev ne e0) GraftColumnBridge.checkpointRdd(prev).foreach(_.unpersist(false))
-      prev = next
-      // compose next round from a stats-clean rewrap: the checkpoint's
+  /** Peel the materialized `e0` (canonical a<b edges, owned by the
+    * loop) to the k-truss fixpoint; returns the kept surviving edge set.
+    * A loop that exhausts `maxRounds` while still shrinking reports
+    * converged = false — the registered query fails LOUDLY rather than
+    * shipping a non-fixpoint the oracle can't match. */
+  private def peel(e0: CheckpointRegistry.Ckpt, k: Int,
+      maxRounds: Int): Superstep.Fixpoint =
+    Superstep.untilFixpoint(e0, maxRounds = maxRounds) { e =>
+      // compose each round from a stats-clean rewrap: the checkpoint's
       // propagated size estimate would otherwise compound through this
       // round's 5-way inner join until the driver livelocks in
       // BigInteger stats math (see GraftColumnBridge.statsClean)
-      e = GraftColumnBridge.statsClean(next)
+      supportOf(statsClean(e))
+        .filter(col("sup") >= k - 2)
+        .select(col("a"), col("b"))
     }
-    report(r, !changed)
-    // prev is the actual checkpoint backing `e` (a stats-clean rewrap
-    // has no checkpoint in its own plan for the registry to find)
-    CheckpointRegistry.trackFinal(spark, prev)
-    e
-  }
 
   /** Decomposition over any directed edge frame: (src, dst, trussness)
     * for every edge of the 3-truss, labeled 4 when it survives the
     * nested 4-peel. */
   def decompose(spark: SparkSession, edgesRaw: DataFrame): DataFrame =
-    LoopConf.pinned(spark, org.apache.spark.sql.GraftColumnBridge.memoCount(edgesRaw)) {
-      val e0 = graft.graph.CitationGraph.bidirectional(edgesRaw)
+    Superstep.pinned(spark, org.apache.spark.sql.GraftColumnBridge.memoCount(edgesRaw)) {
+      import CheckpointRegistry.ckpt
+      val s3 = peel(ckpt(graft.graph.CitationGraph.bidirectional(edgesRaw)
         .filter(col("src") < col("dst"))
         .select(col("src").as("a"), col("dst").as("b"))
-        .repartition(col("a"))
-        .localCheckpoint(true)
-      var conv3 = false
-      var conv4 = false
-      val s3 = peel(spark, e0, 3, Depth3) { (r, c) => lastRounds3 = r; conv3 = c }
-      val s4 = peel(spark, s3, 4, Depth4) { (r, c) => lastRounds4 = r; conv4 = c }
-      lastConverged = conv3 && conv4
-      import org.apache.spark.sql.GraftColumnBridge
-      // an empty graph's peel is the identity (loop never runs): s3/s4
-      // ARE e0 then, and freeing it would strand the result's blocks
-      if ((s3 ne e0) && (s4 ne e0))
-        GraftColumnBridge.checkpointRdd(e0).foreach(_.unpersist(false))
-      s3.join(s4.withColumn("t4", lit(true)), Seq("a", "b"), "left")
+        .repartition(col("a"))), 3, Depth3)
+      // the 4-peel starts from a copy: the loop frees its start, and the
+      // 3-truss is still read below
+      val s4 = peel(ckpt(s3.df), 4, Depth4)
+      lastRounds3 = s3.rounds
+      lastRounds4 = s4.rounds
+      lastConverged = s3.converged && s4.converged
+      statsClean(s3.df).join(statsClean(s4.df).withColumn("t4", lit(true)),
+          Seq("a", "b"), "left")
         .select(col("a").as("src"), col("b").as("dst"),
           when(col("t4").isNotNull, 4L).otherwise(3L).as("trussness"))
     }

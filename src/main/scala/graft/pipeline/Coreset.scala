@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
 import graft.Tables
-import graft.analytics.CheckpointRegistry
+import graft.analytics.CheckpointRegistry.{ckpt, free, keep}
 import graft.functions.GraftFunctions.array_dot_long
 import graft.registry.Q
 
@@ -57,19 +57,14 @@ object Coreset {
     * non-increasing); the seed's radius is -1 (no prior set). Stops
     * early when fewer than k distinct vectors exist. */
   def kcenter(spark: SparkSession, emb: DataFrame, k: Int = K): DataFrame = {
-    import org.apache.spark.sql.GraftColumnBridge
-    def ckpt(df: DataFrame): DataFrame = df.localCheckpoint(true)
-    def free(df: DataFrame): Unit =
-      GraftColumnBridge.checkpointRdd(df).foreach(_.unpersist(false))
-
     val base = fixedPoint(emb)
     val seed = base.agg(min(col("vec_id")).as("cid"))
-    // fused checkpoint+count (ckptCounted): the emptiness probe rides
-    // the materialization job instead of a second cached scan
-    val (seedRow, nSeed, _) = GraftColumnBridge.ckptCounted(
+    // the emptiness probe rides the materialization job
+    val seedCk = ckpt(
       base.join(broadcast(seed), col("vec_id") === col("cid"))
         .select(col("cid"), col("q").as("cq"), col("l2").as("cl2"),
           lit(-1L).as("radius")))
+    val seedRow = keep(spark, seedCk.df)
     var selected = List(seedRow.select(lit(0L).as("rnd"),
       col("cid").as("vec_id"), col("radius")))
 
@@ -79,21 +74,22 @@ object Coreset {
       .select(col("vec_id"), col("q"), col("l2"),
         (col("l2") + col("cl2")
           - lit(2L) * array_dot_long(col("q"), col("cq"))).as("mindist"),
-        (col("vec_id") === col("cid")).as("sel")))
+        (col("vec_id") === col("cid")).as("sel"))).df
 
     var r = 1
-    var exhausted = nSeed == 0L
+    var exhausted = seedCk.rows == 0L
     while (r < k && !exhausted) {
       val cand = state.filter(!col("sel"))
       val maxd = cand.agg(max(col("mindist")).as("maxd"))
       val pick = cand.join(broadcast(maxd), col("mindist") === col("maxd"))
         .agg(min(col("vec_id")).as("cid"), max(col("maxd")).as("radius"))
-      val (centerRow, nCenter, _) = GraftColumnBridge.ckptCounted(
+      val center = ckpt(
         state.join(broadcast(pick), col("vec_id") === col("cid"))
           .select(col("cid"), col("q").as("cq"), col("l2").as("cl2"),
             col("radius")))
-      if (nCenter == 0L) { exhausted = true; free(centerRow) }
+      if (center.rows == 0L) { exhausted = true; free(center.df) }
       else {
+        val centerRow = keep(spark, center.df)
         selected ::= centerRow.select(lit(r.toLong).as("rnd"),
           col("cid").as("vec_id"), col("radius"))
         val next = ckpt(state.crossJoin(broadcast(centerRow))
@@ -101,14 +97,13 @@ object Coreset {
             least(col("mindist"),
               col("l2") + col("cl2")
                 - lit(2L) * array_dot_long(col("q"), col("cq"))).as("mindist"),
-            (col("sel") || col("vec_id") === col("cid")).as("sel")))
+            (col("sel") || col("vec_id") === col("cid")).as("sel"))).df
         free(state); state = next
-        CheckpointRegistry.trackFinal(spark, centerRow)
       }
       r += 1
     }
-    CheckpointRegistry.trackFinal(spark, seedRow)
-    CheckpointRegistry.trackFinal(spark, state)
+    // the result reads only the kept center rows
+    free(state)
     selected.reverse.reduce(_ union _)
   }
 

@@ -105,7 +105,7 @@ object ExactBaselines {
           s.read.parquet(dir.getPath)
         }
       }
-      df.localCheckpoint(true)
+      graft.analytics.CheckpointRegistry.ckpt(df).df
     })
 
   private object storeLock
@@ -141,8 +141,7 @@ object ExactBaselines {
     while (it.hasNext) {
       val e = it.next()
       if (e.getKey._1 == sid) {
-        org.apache.spark.sql.GraftColumnBridge.checkpointRdd(e.getValue)
-          .foreach(r => try r.unpersist(false) catch { case _: Throwable => () })
+        graft.analytics.CheckpointRegistry.free(e.getValue)
         it.remove()
       }
     }

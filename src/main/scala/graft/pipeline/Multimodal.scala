@@ -523,8 +523,8 @@ object Multimodal {
     * is the maintained artifact anyway; registered as a final so the
     * runners release it post-query. */
   private def bandedFpPairs(fps: DataFrame, fpCol: String): DataFrame = {
-    val h = fps.filter(col(fpCol).isNotNull).localCheckpoint(true)
-    graft.analytics.CheckpointRegistry.trackFinal(fps.sparkSession, h)
+    val h = graft.analytics.CheckpointRegistry.keep(fps.sparkSession,
+      graft.analytics.CheckpointRegistry.ckpt(fps.filter(col(fpCol).isNotNull)).df)
     val bands = (0 until 4).map { b =>
       h.select(col("doc_id"), col(fpCol).as("fp"),
         shiftright(col(fpCol), 16 * b).bitwiseAND(lit(0xFFFFL)).as("k"),

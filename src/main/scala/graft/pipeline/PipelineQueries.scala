@@ -76,7 +76,7 @@ object PipelineQueries {
     if (hit != null) hit
     else {
       val v =
-        if (sever) mk.localCheckpoint(true)
+        if (sever) graft.analytics.CheckpointRegistry.ckpt(mk).df
         else mk.persist(StorageLevel.MEMORY_AND_DISK)
       val prev = shared.putIfAbsent(k, v)
       if (prev != null) { release(v); prev } else v
@@ -87,9 +87,7 @@ object PipelineQueries {
     * backed (df.unpersist is a no-op on checkpoints — their blocks are
     * freed via the backing RDD). */
   private def release(df: DataFrame): Unit = {
-    try org.apache.spark.sql.GraftColumnBridge.checkpointRdd(df)
-      .foreach(_.unpersist(false))
-    catch { case _: Throwable => () }
+    graft.analytics.CheckpointRegistry.free(df)
     try df.unpersist(false) catch { case _: Throwable => () }
   }
 
@@ -2090,18 +2088,16 @@ object PipelineQueries {
       // checkpoint the runner had already released after the previous
       // query, while overwrite/count used the cache) — checkpointing the
       // small packed frames makes the write jobs scan them directly.
-      // Registered as finals so the runner frees them post-query.
-      val bp = basePacked.localCheckpoint(true)
-      graft.analytics.CheckpointRegistry.trackFinal(s, bp)
+      // Kept so the runner frees them post-query.
+      import graft.analytics.CheckpointRegistry.{ckpt, keep}
+      val bp = keep(s, ckpt(basePacked).df)
       val baseMax = bp.groupBy(col("shard")).agg(max(col("bin")).as("maxbin"))
-      val ip = pack(chunks.filter(col("doc_id") % 10 === 7))
+      val ip = keep(s, ckpt(pack(chunks.filter(col("doc_id") % 10 === 7))
         .join(baseMax, Seq("shard"), "left")
         .withColumn("bin",
           coalesce(col("maxbin") + 1, lit(0L)) + expr(s"(c - 1) div $PackCapacity"))
         .select(col("shard"), col("bin"), col("doc_id"),
-          col("start").cast(LongType).as("start"), col("n_tokens"), col("fp"))
-        .localCheckpoint(true)
-      graft.analytics.CheckpointRegistry.trackFinal(s, ip)
+          col("start").cast(LongType).as("start"), col("n_tokens"), col("fp"))).df)
       val dir = "target/curate_incr/" + d.replaceAll("[^A-Za-z0-9.]", "_")
       graft.sources.PartitionedStore.write(bp, dir, Seq("shard"))
       ip.write.mode("append").partitionBy("shard").parquet(dir)

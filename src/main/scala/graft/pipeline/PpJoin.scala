@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
 import graft.Tables
+import graft.analytics.CheckpointRegistry.{ckpt, keep}
 import graft.registry.Q
 
 /** Prefix-filtered set-similarity self-join (the PPJoin family — Xiao,
@@ -110,14 +111,11 @@ object PpJoin {
       explode(col("ts")).as("t"))
     val p = expr(s"n - (($TauNum * n + ${TauDen - 1}) div $TauDen) + 1")
     val w = Window.partitionBy(col("doc_id")).orderBy(col("df"), col("t"))
-    val pref = phase(label)(posts.join(dfTab, Seq("t"), "left")
+    keep(spark, phase(label)(ckpt(posts.join(dfTab, Seq("t"), "left")
       .withColumn("df", coalesce(col("df"), lit(0L)))
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") <= p)
-      .select(col("doc_id"), col("n"), col("t"), col("rn").cast(LongType).as("rn"))
-      .localCheckpoint(true))
-    graft.analytics.CheckpointRegistry.trackFinal(spark, pref)
-    pref
+      .select(col("doc_id"), col("n"), col("t"), col("rn").cast(LongType).as("rn"))).df))
   }
 
   /** Expand a prefix side over its admissible partner sizes so the
@@ -201,12 +199,10 @@ object PpJoin {
     // — the sort is NOT the bend; the run is O(candidates) (210M at
     // sf10, 100x sf0.1's 2.1M, wall 54x — sublinear per candidate),
     // so the default plan stays
-    val scored = phase("score")(cand.join(sa, "a_id").join(sb, "b_id")
+    val scored = keep(spark, phase("score")(ckpt(cand.join(sa, "a_id").join(sb, "b_id")
       .select(col("a_id"), col("b_id"),
         size(array_intersect(col("tsa"), col("tsb"))).cast(LongType).as("c"),
-        col("na"), col("nb"))
-      .localCheckpoint(true))
-    graft.analytics.CheckpointRegistry.trackFinal(spark, scored)
+        col("na"), col("nb"))).df))
     scored
       .filter(col("c") * TauDen >= lit(TauNum) * (col("na") + col("nb") - col("c")))
       .select(col("a_id"), col("b_id"), col("c"), col("na"), col("nb"),
@@ -221,8 +217,7 @@ object PpJoin {
     // the predicate and the projection — fused lazily, PpProbe measured
     // the full plan at 24s while the sum of its materialized stages is
     // ~8s (sf0.1, 2 reps): recomputation, not work, dominated.
-    val sets = phase("sets")(tokenSets(docs).localCheckpoint(true))
-    graft.analytics.CheckpointRegistry.trackFinal(spark, sets)
+    val sets = keep(spark, phase("sets")(ckpt(tokenSets(docs)).df))
     val posts = sets.select(col("doc_id"), col("n"),
       explode(col("ts")).as("t"))
     val dfTab = posts.groupBy(col("t")).agg(count(lit(1)).as("df"))
@@ -243,20 +238,17 @@ object PpJoin {
     // arrays under an injectivity gate, and the score runs behind a
     // materialization barrier before the tau filter — each choice is
     // PpProbe-measured (see the scaladoc above and COVERAGE).
-    // candidate generation + positional filter (see positionalOk) +
-    // fused checkpoint/contract-count (ckptCounted: one job materializes
-    // the candidate frame and counts it)
-    val (cand, nCand, _) = phase("cand")(
-      org.apache.spark.sql.GraftColumnBridge.ckptCounted(expandSizes(prefix)
+    // candidate generation + positional filter (see positionalOk); one
+    // job materializes the candidate frame and counts it
+    val cand = phase("cand")(ckpt(expandSizes(prefix)
         .join(prefix.select(col("doc_id").as("b_id"), col("n").as("nb2"),
           col("t").as("tb"), col("rn").as("rb")),
           col("ta") === col("tb") && col("nb") === col("nb2"))
         .filter(col("a_id") < col("b_id"))
         .transform(maybePositional)
         .select(col("a_id"), col("b_id")).distinct()))
-    graft.analytics.CheckpointRegistry.trackFinal(spark, cand)
-    lastCandidates = nCand
-    verifyPairs(spark, cand, sets)
+    lastCandidates = cand.rows
+    verifyPairs(spark, keep(spark, cand.df), sets)
   }
 
   /** Incremental near-dup detection: the pairs of the FULL similarity
@@ -272,8 +264,7 @@ object PpJoin {
     * path, the standing index is rebuilt here for the registered
     * query; in production it is the maintained artifact. */
   def incrementalPairs(spark: SparkSession, docs: DataFrame): DataFrame = {
-    val sets = phase("sets")(tokenSets(docs).localCheckpoint(true))
-    graft.analytics.CheckpointRegistry.trackFinal(spark, sets)
+    val sets = keep(spark, phase("sets")(ckpt(tokenSets(docs)).df))
     val corpus = sets.filter(col("doc_id") % 10 =!= 7)
     val batch = sets.filter(col("doc_id") % 10 === 7)
     val dfTab = corpus.select(explode(col("ts")).as("t"))
@@ -289,17 +280,15 @@ object PpJoin {
         col("t").as("tb"), col("rn").as("rb"))
     // the positional filter is symmetric in the two (size, position)
     // pairs, so it applies before the least/greatest canonicalization
-    val (cand, nCand, _) = phase("cand")(
-      org.apache.spark.sql.GraftColumnBridge.ckptCounted(expandSizes(batchPrefix)
+    val cand = phase("cand")(ckpt(expandSizes(batchPrefix)
         .join(index, col("ta") === col("tb") && col("nb") === col("nb2"))
         .filter(col("a_id") =!= col("b_id"))
         .transform(maybePositional)
         .select(least(col("a_id"), col("b_id")).as("a_id"),
           greatest(col("a_id"), col("b_id")).as("b_id"))
         .distinct()))
-    graft.analytics.CheckpointRegistry.trackFinal(spark, cand)
-    lastIncrCandidates = nCand
-    verifyPairs(spark, cand, sets)
+    lastIncrCandidates = cand.rows
+    verifyPairs(spark, keep(spark, cand.df), sets)
   }
 
   // ---- registry entry ---------------------------------------------------

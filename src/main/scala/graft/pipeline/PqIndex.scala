@@ -177,7 +177,8 @@ object PqIndex {
   private[pipeline] def trained(s: SparkSession, d: String): (DataFrame, DataFrame) =
     cache.computeIfAbsent((graft.SessionKey(s), d), _ => {
       val (cents, cds) = trainEncode(quantDf(s, d))
-      (cents.localCheckpoint(true), cds.localCheckpoint(true))
+      (graft.analytics.CheckpointRegistry.ckpt(cents).df,
+        graft.analytics.CheckpointRegistry.ckpt(cds).df)
     })
 
   /** Materialize the trained index (Bench's `_setup_pq` entry). */
@@ -193,10 +194,8 @@ object PqIndex {
     while (it.hasNext) {
       val e = it.next()
       if (e.getKey._1 == sid) {
-        Seq(e.getValue._1, e.getValue._2).foreach { df =>
-          org.apache.spark.sql.GraftColumnBridge.checkpointRdd(df)
-            .foreach(r => try r.unpersist(false) catch { case _: Throwable => () })
-        }
+        graft.analytics.CheckpointRegistry.free(e.getValue._1)
+        graft.analytics.CheckpointRegistry.free(e.getValue._2)
         it.remove()
       }
     }

@@ -202,7 +202,8 @@ object SemanticCluster {
   def trainedFor(s: SparkSession, d: String): (DataFrame, DataFrame) =
     cache.computeIfAbsent((graft.SessionKey(s), d), _ => {
       val (cents, asg) = trainAssign(quantDf(s, d))
-      (cents.localCheckpoint(true), asg.localCheckpoint(true))
+      (graft.analytics.CheckpointRegistry.ckpt(cents).df,
+        graft.analytics.CheckpointRegistry.ckpt(asg).df)
     })
 
   /** Materialize the trained quantizer (Bench's `_setup_kmeans`). */
@@ -218,10 +219,8 @@ object SemanticCluster {
     while (it.hasNext) {
       val e = it.next()
       if (e.getKey._1 == sid) {
-        Seq(e.getValue._1, e.getValue._2).foreach { df =>
-          org.apache.spark.sql.GraftColumnBridge.checkpointRdd(df)
-            .foreach(r => try r.unpersist(false) catch { case _: Throwable => () })
-        }
+        graft.analytics.CheckpointRegistry.free(e.getValue._1)
+        graft.analytics.CheckpointRegistry.free(e.getValue._2)
         it.remove()
       }
     }

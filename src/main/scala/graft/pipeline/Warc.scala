@@ -258,7 +258,8 @@ object Warc {
 
   private[graft] def seekableShards(s: SparkSession, d: String): DataFrame =
     shardCache.computeIfAbsent((graft.SessionKey(s), d), _ =>
-      withWarcZstSeekable(Tables.fanout(Tables.documents(s, d))).localCheckpoint(true))
+      graft.analytics.CheckpointRegistry.ckpt(
+        withWarcZstSeekable(Tables.fanout(Tables.documents(s, d)))).df)
 
   /** Materialize the stored archive (Bench's `_setup_warc_zst`). */
   def warmShards(s: SparkSession, d: String): Unit = {

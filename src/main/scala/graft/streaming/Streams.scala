@@ -272,13 +272,11 @@ object Streams {
     /** The foreachBatch hook. */
     def apply(batch: DataFrame, batchId: Long): Unit = synchronized {
       val tgt = state.getOrElse(batch.limit(0))
-      val next = graft.operators.Cdc
-        .applyLog(tgt, batch, keys, seq, deleteWhen)
-        .localCheckpoint(true)
+      val next = graft.analytics.CheckpointRegistry.ckpt(graft.operators.Cdc
+        .applyLog(tgt, batch, keys, seq, deleteWhen)).df
       // the superseded state is fully folded into `next` — free its
       // blocks now, or a long stream accumulates one table copy per batch
-      state.foreach(p => org.apache.spark.sql.GraftColumnBridge
-        .checkpointRdd(p).foreach(_.unpersist(false)))
+      state.foreach(graft.analytics.CheckpointRegistry.free)
       state = Some(next)
     }
   }

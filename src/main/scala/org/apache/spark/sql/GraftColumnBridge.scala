@@ -26,10 +26,9 @@ object GraftColumnBridge {
   def sessionUUID(spark: SparkSession): String =
     spark.asInstanceOf[classic.SparkSession].sessionUUID
 
-  /** The materialized RDD behind a localCheckpoint'ed Dataset (its plan
-    * is a LogicalRDD), so iterative algorithms can explicitly unpersist
-    * superseded iteration frames instead of leaking them until the
-    * ContextCleaner catches up (ADVICE r2, HyperANF superstep frames). */
+  /** The materialized RDD behind a localCheckpoint'ed Dataset (its
+    * analyzed plan is a LogicalRDD), or None for any other frame —
+    * what graft.analytics.CheckpointRegistry counts, frees and pins. */
   def checkpointRdd(df: DataFrame): Option[org.apache.spark.rdd.RDD[_]] =
     analyzed(df) match {
       case lr: execution.LogicalRDD => Some(lr.rdd)
@@ -53,23 +52,8 @@ object GraftColumnBridge {
       ds.queryExecution.toRdd, ds.schema)
   }
 
-  /** Row count of a localCheckpoint-backed frame via its MATERIALIZED
-    * RDD: one cached-scan job — no re-analysis, no partial/final
-    * aggregate pair, no exchange. The superstep loops call a
-    * convergence count every round; `Dataset.count()` plans a fresh
-    * aggregate each time (measured ~100-140 ms per call on the bench
-    * host vs ~30 ms for the raw RDD count — graft.SchedProbe,
-    * OPTIMIZATION_r13.md §Scheduler). Falls back to `Dataset.count()`
-    * when the frame is not checkpoint-backed, so callers can use it
-    * unconditionally on loop state. */
-  def fastCount(df: DataFrame): Long =
-    analyzed(df) match {
-      case lr: execution.LogicalRDD => lr.rdd.count()
-      case _ => df.count()
-    }
-
   /** Exact row count, memoized per (session, canonical plan) — for the
-    * superstep loops' partition-sizing count (LoopConf.pinned): every
+    * superstep loops' partition-sizing count (Superstep.pinned): every
     * loop query counted its raw edge frame on entry, a full scan +
     * aggregate whose value is identical across the ~25 loop queries
     * reading the same frame in one session. Checkpoint-backed frames
@@ -118,109 +102,4 @@ object GraftColumnBridge {
           case other => other.toString
         }
     }.mkString(";")
-
-  /** Lazily localCheckpoint `df`, then materialize it with ONE job that
-    * simultaneously counts its rows and (when `boolCol` is non-null) the
-    * rows whose BOOLEAN `boolCol` is true — fusing the eager-checkpoint
-    * materialization job with the superstep loops' convergence-count job
-    * (previously two scheduler round-trips per loop step: the eager
-    * `localCheckpoint(true)` runs an internal count it throws away, then
-    * fastCount/countTrue runs a second cached-scan job; on the bench
-    * host each job round-trip is ~30 ms — SchedProbe, guide §1.2).
-    *
-    * Counts are returned from `runJob` per partition (exactly-once per
-    * successful task — no accumulator retry double-count), and the job
-    * both caches the local-checkpoint blocks and truncates lineage
-    * exactly as the eager path does (SparkContext.runJob ends with
-    * rdd.doCheckpoint(), the same hook `count()` uses). NULL counts as
-    * false, matching `filter(col)`. */
-  def ckptCounted(df: DataFrame, boolCol: String = null): (DataFrame, Long, Long) = {
-    val c = df.localCheckpoint(false)
-    val idx = Option(boolCol).map { n =>
-      val f = c.schema(n)
-      require(f.dataType == types.BooleanType,
-        s"ckptCounted: column $n is ${f.dataType}, expected BooleanType")
-      c.schema.fieldIndex(n)
-    }.getOrElse(-1)
-    val rdd = analyzed(c) match {
-      case lr: execution.LogicalRDD =>
-        lr.rdd.asInstanceOf[org.apache.spark.rdd.RDD[
-          org.apache.spark.sql.catalyst.InternalRow]]
-      case p => throw new IllegalStateException(
-        s"localCheckpoint did not plan a LogicalRDD: ${p.getClass.getName}")
-    }
-    val counts = c.sparkSession.sparkContext.runJob(rdd,
-      (it: Iterator[org.apache.spark.sql.catalyst.InternalRow]) => {
-        var n = 0L
-        var t = 0L
-        if (idx >= 0) {
-          while (it.hasNext) {
-            val r = it.next(); n += 1L
-            if (!r.isNullAt(idx) && r.getBoolean(idx)) t += 1L
-          }
-        } else {
-          while (it.hasNext) { it.next(); n += 1L }
-        }
-        (n, t)
-      })
-    var n = 0L
-    var t = 0L
-    counts.foreach { p => n += p._1; t += p._2 }
-    (c, n, t)
-  }
-
-  /** ckptCounted's sibling for loops whose convergence statistic is a
-    * SUM of a LONG column rather than a flag count (HyperANF's estimate
-    * total): one job materializes the lazily-localCheckpoint'ed frame
-    * and returns (frame, rowCount, sum(longCol)) — NULL sums as 0. */
-  def ckptSummed(df: DataFrame, longCol: String): (DataFrame, Long, Long) = {
-    val c = df.localCheckpoint(false)
-    val f = c.schema(longCol)
-    require(f.dataType == types.LongType,
-      s"ckptSummed: column $longCol is ${f.dataType}, expected LongType")
-    val idx = c.schema.fieldIndex(longCol)
-    val rdd = analyzed(c) match {
-      case lr: execution.LogicalRDD =>
-        lr.rdd.asInstanceOf[org.apache.spark.rdd.RDD[
-          org.apache.spark.sql.catalyst.InternalRow]]
-      case p => throw new IllegalStateException(
-        s"localCheckpoint did not plan a LogicalRDD: ${p.getClass.getName}")
-    }
-    val parts = c.sparkSession.sparkContext.runJob(rdd,
-      (it: Iterator[org.apache.spark.sql.catalyst.InternalRow]) => {
-        var n = 0L
-        var s = 0L
-        while (it.hasNext) {
-          val r = it.next(); n += 1L
-          if (!r.isNullAt(idx)) s += r.getLong(idx)
-        }
-        (n, s)
-      })
-    var n = 0L
-    var s = 0L
-    parts.foreach { p => n += p._1; s += p._2 }
-    (c, n, s)
-  }
-
-  /** Count rows of a checkpoint-backed frame whose BOOLEAN column
-    * `name` is true, in one cached-scan job (the loop-body
-    * `filter(col).count()` convergence idiom re-plans a filter +
-    * aggregate every round; this reads the materialized rows
-    * directly). NULL counts as false, matching `filter(col)`. */
-  def countTrue(df: DataFrame, name: String): Long = {
-    require(df.schema(name).dataType == types.BooleanType,
-      s"countTrue: column $name is ${df.schema(name).dataType}, expected BooleanType")
-    val idx = df.schema.fieldIndex(name)
-    analyzed(df) match {
-      case lr: execution.LogicalRDD =>
-        lr.rdd.asInstanceOf[org.apache.spark.rdd.RDD[
-          org.apache.spark.sql.catalyst.InternalRow]]
-          .mapPartitions(
-            it => Iterator.single(
-              it.count(r => !r.isNullAt(idx) && r.getBoolean(idx)).toLong),
-            preservesPartitioning = true)
-          .fold(0L)(_ + _)
-      case _ => df.filter(df.col(name)).count()
-    }
-  }
 }

@@ -3,56 +3,51 @@ package graft
 import org.apache.spark.sql.GraftColumnBridge
 import org.apache.spark.sql.functions._
 
-/** The fused checkpoint+count primitive (GraftColumnBridge.ckptCounted)
-  * and the memoCount key/eviction fixes — the r14 loop-job-fusion lever
-  * replaces every superstep loop's (eager localCheckpoint job, count
-  * job) pair with ONE materializing job, so its counts must be exactly
-  * `count()` / `filter(col).count()` and the returned frame must be a
-  * real checkpoint (LogicalRDD-backed, contents identical). */
+import graft.analytics.CheckpointRegistry
+import graft.analytics.CheckpointRegistry.{Flagged, Sum, ckpt}
+
+/** The fused checkpoint+count primitive (CheckpointRegistry.ckpt) and
+  * the memoCount key/eviction fixes. Every superstep round is ONE
+  * materializing job, so its counts must be exactly `count()` /
+  * `filter(col).count()` and the returned frame must be a real
+  * checkpoint (LogicalRDD-backed, contents identical). */
 class CkptCountSpec extends SparkSpec {
 
-  test("ckptCounted counts rows and true flags exactly, NULL = false") {
+  test("ckpt counts rows and true flags exactly, NULL = false") {
     import spark.implicits._
     val df = Seq(
       (1L, Some(true)), (2L, Some(false)), (3L, Some(true)),
       (4L, None), (5L, Some(true))
     ).toDF("id", "chg").withColumn("chg", col("chg")) // nullable boolean
       .repartition(3)
-    val (c, n, t) = GraftColumnBridge.ckptCounted(df, "chg")
-    assert(n === df.count())
-    assert(t === df.filter(col("chg")).count())
-    assert(n === 5L && t === 3L)
-    // checkpoint-backed: fastCount takes the LogicalRDD path and the
-    // contents round-trip unchanged
-    assert(GraftColumnBridge.checkpointRdd(c).nonEmpty)
-    assert(c.collect().map(_.getLong(0)).sorted.toSeq === Seq(1L, 2L, 3L, 4L, 5L))
-    GraftColumnBridge.checkpointRdd(c).foreach(_.unpersist(false))
+    val c = ckpt(df, Flagged("chg"))
+    assert(c.rows === df.count())
+    assert(c.stat === df.filter(col("chg")).count())
+    assert(c.rows === 5L && c.stat === 3L)
+    // checkpoint-backed, and the contents round-trip unchanged
+    assert(GraftColumnBridge.checkpointRdd(c.df).nonEmpty)
+    assert(c.df.collect().map(_.getLong(0)).sorted.toSeq === Seq(1L, 2L, 3L, 4L, 5L))
+    CheckpointRegistry.free(c.df)
   }
 
-  test("ckptCounted without a flag column counts rows only") {
+  test("ckpt without a stat column counts rows only") {
     val df = spark.range(0, 1234, 1, 5).toDF("id")
-    val (c, n, t) = GraftColumnBridge.ckptCounted(df)
-    assert(n === 1234L)
-    assert(t === 0L)
-    assert(c.count() === 1234L)
-    GraftColumnBridge.checkpointRdd(c).foreach(_.unpersist(false))
+    val c = ckpt(df)
+    assert(c.rows === 1234L)
+    assert(c.stat === 0L)
+    assert(c.df.count() === 1234L)
+    val s = ckpt(df, Sum("id"))
+    assert(s.stat === (0L until 1234L).sum)
+    CheckpointRegistry.free(c.df)
+    CheckpointRegistry.free(s.df)
   }
 
-  test("ckptCounted rejects a non-boolean flag column") {
+  test("ckpt rejects a non-boolean flag column") {
     val df = spark.range(3).toDF("id")
     val e = intercept[IllegalArgumentException] {
-      GraftColumnBridge.ckptCounted(df, "id")
+      ckpt(df, Flagged("id"))
     }
     assert(e.getMessage.contains("BooleanType"))
-  }
-
-  test("countTrue rejects a non-boolean column") {
-    val df = spark.range(3).toDF("id").localCheckpoint(true)
-    val e = intercept[IllegalArgumentException] {
-      GraftColumnBridge.countTrue(df, "id")
-    }
-    assert(e.getMessage.contains("BooleanType"))
-    GraftColumnBridge.checkpointRdd(df).foreach(_.unpersist(false))
   }
 
   test("memoCount keys on the scan LOCATION, not just the plan shape") {
